@@ -1,10 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Q
+import graft.functions.{HeadSummary, KeywordClassify, KeywordLexicon}
 import graft.model.Tables
 
 /** The reference's news pipeline (SURVEY.md §2.3–2.5, §2.9, §3.2),
@@ -25,10 +28,13 @@ import graft.model.Tables
   *    extractive variant lives in [[graft.functions.TextFunctions.extractiveSummary]]
   *    (not SQL-expressible → rows-only check).
   *
-  * Every scalar here is a Catalyst expression (no UDFs), so classification
-  * and summarisation stay inside WholeStageCodegen and Catalyst can push
+  * Classification and summarisation are each one Catalyst expression
+  * with its own `doGenCode` ([[graft.functions.KeywordClassify]],
+  * [[graft.functions.HeadSummary]]; no UDFs), so both run as tight loops
+  * inside the whole-stage-codegen span and Catalyst can push
   * filters/pruning through them — the reference's `mapInPandas` barrier
-  * (SURVEY.md §4) is gone by construction.
+  * (SURVEY.md §4) is gone by construction. `CodegenAuditSpec` pins the
+  * span; `NewsKernelsSpec` pins both kernels to their SQL forms.
   *
   * One canonical label set is used end-to-end, fixing the reference's
   * classifier/router label mismatch (SURVEY.md §2.9).
@@ -64,43 +70,48 @@ object NewsPipeline {
 
   // -------------------------------------------------------- classification
 
+  private val keywordLexicon = KeywordLexicon(lexicon)
+
+  /** [[classify]]'s and [[summarize]]'s kernels as SQL functions over
+    * [[lexicon]]. Spark keeps the Expression → Column path private, so
+    * they reach the DataFrame API through the session's function
+    * registry: once per session via [[withKernels]], or session-wide
+    * from [[graft.plans.GraftExtensions]]. */
+  private[graft] val kernelFunctions
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (FunctionIdentifier("keyword_classify"),
+      new ExpressionInfo(classOf[KeywordClassify].getName, "keyword_classify"),
+      (exprs: Seq[Expression]) => KeywordClassify(exprs.head, keywordLexicon)),
+    (FunctionIdentifier("head_summary"),
+      new ExpressionInfo(classOf[HeadSummary].getName, "head_summary"),
+      (exprs: Seq[Expression]) => HeadSummary(exprs.head)))
+
+  /** Registers [[kernelFunctions]] on `df`'s session unless present. */
+  private def withKernels(df: DataFrame): DataFrame = {
+    val registry = df.sparkSession.sessionState.functionRegistry
+    kernelFunctions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
+    df
+  }
+
   /** Adds `category` (top-1 label, first-in-lexicon-order tiebreak) and
     * `confidence` (top score / total score; 0.0 + `unknown` when no
-    * keyword hits — the reference's sentinel row, SURVEY.md §2.4).
+    * keyword hits or the text is NULL — the reference's sentinel row and
+    * non-string guard, SURVEY.md §2.4, `news_categorization_streaming.py:74-81`).
     *
-    * The per-category scores are LET-BOUND via a single-element
-    * `transform(array(scores), sc -> ...)` lambda. This matters: with the
-    * scores as plain (intermediate) columns, predicate pushdown and
-    * project collapsing substitute the full score tree into every
-    * consumer — `greatest(...)` duplicated per CASE arm pushed a filter
-    * condition past janino's 64 KB method limit and dropped whole stages
-    * to interpreted mode. A lambda variable is opaque to substitution, so
-    * every keyword chain appears exactly once in any copy of this
-    * expression, wherever the optimizer moves it.
-    * `array_position(sc, array_max(sc))` = first max → the fixed
-    * lexicon-order tiebreak. */
-  def classify(df: DataFrame, textCol: String = "text"): DataFrame = {
-    // coalesce: NULL text takes the unknown/0.0 sentinel path, matching
-    // the reference's non-string guard (news_categorization_streaming.py:74-81)
-    val t = s"coalesce($textCol, '')"
-    val hit = (kw: String) =>
-      s"CAST((length($t) - length(replace($t, '$kw', ''))) / ${kw.length} AS BIGINT)"
-    val scores = lexicon
-      .map { case (_, kws) => kws.map(hit).mkString(" + ") }
-      .mkString("array(", ", ", ")")
-    val cats = lexicon.map(c => s"'${c._1}'").mkString("array(", ", ", ")")
-    val clsExpr =
-      s"""element_at(transform(array($scores), sc -> named_struct(
-         |  'category', IF(array_max(sc) = 0L, 'unknown',
-         |    element_at($cats, CAST(array_position(sc, array_max(sc)) AS INT))),
-         |  'confidence', IF(array_max(sc) = 0L, CAST(0.0 AS DOUBLE),
-         |    CAST(array_max(sc) AS DOUBLE) /
-         |    CAST(aggregate(sc, 0L, (a, x) -> a + x) AS DOUBLE)))), 1)""".stripMargin
-    df.withColumn("__cls", expr(clsExpr))
+    * A category's score is the sum over its keywords `kw` of
+    * `(length(t) - length(replace(t, kw, ''))) / len(kw)`,
+    * `t = coalesce(text, '')`: the non-overlapping occurrence count.
+    * [[graft.functions.KeywordClassify]] computes exactly that in one
+    * byte scan (every keyword is ASCII); [[classifiedCte]] is the same
+    * formula in DuckDB SQL. */
+  def classify(df: DataFrame, textCol: String = "text"): DataFrame =
+    withKernels(df)
+      .withColumn("__cls", expr(s"keyword_classify(`$textCol`)"))
       .withColumn("category", col("__cls.category"))
       .withColumn("confidence", col("__cls.confidence"))
       .drop("__cls")
-  }
 
   /** DuckDB SQL for the same classification, as a scores CTE + final
     * projection; shares [[lexicon]] so Spark and oracle can't drift. */
@@ -133,20 +144,21 @@ object NewsPipeline {
 
   // -------------------------------------------------------- summarisation
 
-  /** The reference's summary length law: min(100, max(20, words/3))
-    * (`news_summarization_batch.py:66-67`). */
-  def budget(words: Column): Column =
-    least(lit(100), greatest(lit(20), (words / 3).cast("int"))).cast("int")
-
-  /** Word-budget head summary: first `budget` words of the (5000-char
-    * truncated, `news_summarization_batch.py:65,92`) document. */
-  def summarize(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val words = split(substring(coalesce(col(textCol), lit("")), 1, 5000), " ")
-    val b = budget(size(words))
-    df.withColumn("summary", array_join(slice(words, lit(1), b), " "))
-      .withColumn("n_words", size(words).cast("long"))
-      .withColumn("budget", b.cast("long"))
-  }
+  /** Word-budget head summary of the (5000-char truncated,
+    * `news_summarization_batch.py:65,92`) document under the reference's
+    * length law `budget = min(100, max(20, n_words / 3))` (`:66-67`).
+    * With `w = split(substring(coalesce(text, ''), 1, 5000), ' ')`, the
+    * added columns are exactly `summary = array_join(slice(w, 1, budget),
+    * ' ')`, `n_words = size(w)` and `budget`, computed by
+    * [[graft.functions.HeadSummary]] in one scan; [[summarySql]] is the
+    * DuckDB form. */
+  def summarize(df: DataFrame, textCol: String = "text"): DataFrame =
+    withKernels(df)
+      .withColumn("__sum", expr(s"head_summary(`$textCol`)"))
+      .withColumn("summary", col("__sum.summary"))
+      .withColumn("n_words", col("__sum.n_words"))
+      .withColumn("budget", col("__sum.budget"))
+      .drop("__sum")
 
   private val summarySql =
     """array_to_string(list_slice(string_split(substring(coalesce(text, ''), 1, 5000), ' '), 1,

@@ -18,8 +18,9 @@ import graft.functions.{BoundedEditDistance, CosineSimilarity,
   *    `cosine_sim` / `cosine_sim_d` / `dot_product` / `simhash64` /
   *    `word_shingles` / `bounded_edit_distance` / `ngram_explode` /
   *    `kmv_sketch` (every builder `GraftFunctions.register` installs
-  *    per-session) — becomes session functions with no per-query
-  *    registry calls;
+  *    per-session) and the news pipeline's `keyword_classify` /
+  *    `head_summary` kernels (`NewsPipeline.kernelFunctions`) — becomes
+  *    session functions with no per-query registry calls;
   *  - `injectOptimizerRule`: [[RewriteDotProducts]] — auto-vectorisation
   *    of the built-in higher-order-function dot-product idiom into the
   *    codegen'd [[graft.functions.DotProduct]] loop — and
@@ -73,6 +74,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_sketch"),
       (exprs: Seq[Expression]) => KmvSketchAgg(exprs(0),
         exprs(1).eval().asInstanceOf[Number].intValue())))
+    graft.ops.NewsPipeline.kernelFunctions.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => RewriteDotProducts)
     e.injectOptimizerRule(_ => RewriteTopKPerKey)
     e.injectPlannerStrategy(_ => TopKPerKeyStrategy)

@@ -18,10 +18,12 @@ import graft.ops.NewsPipeline
   *    ([[NewsPipeline.classify]]), so the streaming plan is map-only and
   *    scales with source parallelism — no Python worker hop, no
   *    per-row side effects;
-  *  - persistence happens in `foreachBatch` as an idempotent
-  *    partitioned-parquet append (exactly-once per batch with checkpoint),
-  *    replacing the reference's per-row Mongo insert inside the transform
-  *    (at-least-once, lineage-invisible — `:88-91`);
+  *  - persistence happens in `foreachBatch` as a partitioned-parquet
+  *    append tagged with its batch id, replacing the reference's per-row
+  *    Mongo insert inside the transform (lineage-invisible — `:88-91`).
+  *    It is at-least-once, not exactly-once: a batch replayed after a
+  *    crash between its write and its checkpoint commit is appended
+  *    again (ROADMAP.md item 3 measured 100 → 200 rows);
   *  - checkpoint location is stable, not timestamp-suffixed (`:32`), so
   *    restarts actually recover.
   *
@@ -285,7 +287,8 @@ object StreamOps {
     * aggregation is unsupported, so the production shape is: watermarked
     * tumbling counts finalise in APPEND mode, and each finalised batch
     * passes through the SAME [[trendingTopK]] stage inside foreachBatch
-    * before an idempotent parquet append. Correct because append mode
+    * before a parquet append (at-least-once, as in
+    * [[persistClassified]]). Correct because append mode
     * emits every (window, type) row of a window in the single
     * micro-batch whose watermark passes the window end — ranking per
     * batch IS ranking per window (multiple windows closing together are
@@ -698,8 +701,11 @@ object StreamOps {
   }
 
   /** The Mongo-replacement sink: classified stream → partitioned parquet
-    * append per micro-batch. Batch id makes reruns observable; the append
-    * is idempotent under checkpoint recovery at the batch level. */
+    * append per micro-batch. Delivery is at-least-once: `foreachBatch`
+    * replays a batch whose write landed before its checkpoint commit, and
+    * the plain append then writes its rows a second time (ROADMAP.md
+    * item 3). Every row carries its `batch_id`, so a replay is observable
+    * and a reader can dedupe on it. */
   def persistClassified(classified: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
     startPinned(classified.sparkSession)(classified.writeStream

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
+import graft.model.Tables
+import graft.streaming.StreamOps
+
 /** Pins the north-star codegen discipline ("keep expressions inside
   * whole-stage codegen; widen the spans"): the hot map/agg paths of
   * representative queries must plan with WholeStageCodegen stages (the
@@ -59,6 +64,28 @@ class CodegenAuditSpec extends SparkSpec {
     assert(raw"\*\(\d+\)".r.findFirstIn(plan).nonEmpty, plan.take(900))
     assert(raw"\*\(\d+\) Project".r.findAllIn(plan).nonEmpty,
       s"no codegen'd projection around the fallback expr:\n${plan.take(900)}")
+  }
+
+  test("news kernels: classifyStream and n05 evaluate them inside codegen spans") {
+    // classify/summarize used to score through transform/aggregate
+    // lambdas, which are CodegenFallback and ran interpreted per row; the
+    // keyword_classify/head_summary kernels generate code in the stage
+    val stream = StreamOps.classifyStream(
+      Tables.documents(spark, sf).select(col("text").as("value")))
+    stream.collect()
+    val plans = Seq(
+      ("classifyStream", stream.queryExecution.executedPlan.toString,
+        Seq("keyword_classify(")),
+      ("n05", executedPlan("n05_digest"),
+        Seq("keyword_classify(", "head_summary(")))
+    for ((name, plan, kernels) <- plans) {
+      for (hof <- Seq("transform(", "aggregate("))
+        assert(!plan.contains(hof), s"$name still runs a $hof lambda:\n$plan")
+      for (k <- kernels)
+        assert(plan.linesIterator.exists(l =>
+          l.contains(k) && raw"\*\(\d+\)".r.findFirstIn(l).nonEmpty),
+          s"$name evaluates $k outside a codegen span:\n$plan")
+    }
   }
 
   test("q63: the CMS counter build (md5 buckets + stack + count) codegens") {
