@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.ops.NewsPipeline
 
@@ -18,12 +18,11 @@ import graft.ops.NewsPipeline
   *    ([[NewsPipeline.classify]]), so the streaming plan is map-only and
   *    scales with source parallelism — no Python worker hop, no
   *    per-row side effects;
-  *  - persistence happens in `foreachBatch` as a partitioned-parquet
-  *    append tagged with its batch id, replacing the reference's per-row
-  *    Mongo insert inside the transform (lineage-invisible — `:88-91`).
-  *    It is at-least-once, not exactly-once: a batch replayed after a
-  *    crash between its write and its checkpoint commit is appended
-  *    again (ROADMAP.md item 3 measured 100 → 200 rows);
+  *  - persistence happens in `foreachBatch`, one parquet file set per
+  *    micro-batch under `batch_id=<id>/`, replacing the reference's
+  *    per-row Mongo insert inside the transform (lineage-invisible —
+  *    `:88-91`). A replayed batch overwrites its own directory, so the
+  *    sink is exactly-once per batch id;
   *  - checkpoint location is stable, not timestamp-suffixed (`:32`), so
   *    restarts actually recover.
   *
@@ -287,8 +286,7 @@ object StreamOps {
     * aggregation is unsupported, so the production shape is: watermarked
     * tumbling counts finalise in APPEND mode, and each finalised batch
     * passes through the SAME [[trendingTopK]] stage inside foreachBatch
-    * before a parquet append (at-least-once, as in
-    * [[persistClassified]]). Correct because append mode
+    * before [[writeBatch]]. Correct because append mode
     * emits every (window, type) row of a window in the single
     * micro-batch whose watermark passes the window end — ranking per
     * batch IS ranking per window (multiple windows closing together are
@@ -298,8 +296,8 @@ object StreamOps {
     startPinned(events.sparkSession)(windowedCounts(events).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        trendingTopK(df, k).write.mode("append").parquet(outDir): Unit
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        writeBatch(trendingTopK(df, k), outDir, batchId)
       }
       .start())
 
@@ -700,22 +698,24 @@ object StreamOps {
       }
   }
 
-  /** The Mongo-replacement sink: classified stream → partitioned parquet
-    * append per micro-batch. Delivery is at-least-once: `foreachBatch`
-    * replays a batch whose write landed before its checkpoint commit, and
-    * the plain append then writes its rows a second time (ROADMAP.md
-    * item 3). Every row carries its `batch_id`, so a replay is observable
-    * and a reader can dedupe on it. */
+  /** Writes one micro-batch to `outDir/batch_id=<batchId>`, replacing
+    * what an earlier attempt of the same batch left there. */
+  private def writeBatch(batch: DataFrame, outDir: String, batchId: Long) =
+    batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+
+  /** The Mongo-replacement sink: classified stream, stamped with
+    * `created_at`, → one parquet file set per micro-batch in
+    * `outDir/batch_id=<id>/` ([[writeBatch]]). Exactly-once per batch id:
+    * a batch replayed after a crash overwrites its own directory. The
+    * query is long-lived under the default trigger; the caller stops it. */
   def persistClassified(classified: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
     startPinned(classified.sparkSession)(classified.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .withColumn("created_at", current_timestamp())
-          .write.mode("append").partitionBy("category").parquet(outDir)
+        writeBatch(batch.withColumn("created_at", current_timestamp()),
+          outDir, batchId)
       }
-      .trigger(Trigger.AvailableNow())
       .start())
 }

@@ -259,17 +259,65 @@ class StreamingSpec extends SparkSpec {
     val q = StreamOps.persistClassified(
       StreamOps.classifyStream(in.toDF()),
       s"$dir/out", s"$dir/ckpt")
+    // each addData block is one input partition, so one file per batch
     in.addData("spark query", "fast slow run")
     q.processAllAvailable()
+    in.addData("join merge")
+    q.processAllAvailable()
+    assert(q.isActive, "the query is long-lived: processAllAvailable must not end it")
+    val batchIds = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSet
     q.stop()
+    val batchDirs = new java.io.File(s"$dir/out").listFiles()
+      .filter(_.getName.startsWith("batch_id=")).map { d =>
+        d.getName.stripPrefix("batch_id=").toLong ->
+          d.list().count(_.endsWith(".parquet"))
+      }.toMap
+    assert(batchDirs.keySet == batchIds && batchIds.size == 2, batchDirs)
+    assert(batchDirs.values.forall(_ == 1), s"one parquet file per batch: $batchDirs")
     val persisted = spark.read.parquet(s"$dir/out")
-    assert(persisted.count() == 2)
+    assert(persisted.count() == 3)
     assert(persisted.columns.toSet ==
       Set("message", "confidence", "category", "batch_id", "created_at"))
-    // partitioned by category → directory per label
+    assert(persisted.select("batch_id").distinct().collect()
+      .map(_.getAs[Number](0).longValue).toSet == batchIds)
     val cats = persisted.select("category").distinct()
       .collect().map(_.getString(0)).toSet
-    assert(cats == Set("technology", "sports"))
+    assert(cats == Set("technology", "sports", "social"))
+  }
+
+  test("persist replay: a batch re-run after a crash before its commit overwrites, not appends") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-replay").toString
+    val inDir = Paths.get(dir, "in")
+    Files.createDirectories(inDir)
+    Files.write(inDir.resolve("docs.json"),
+      (0 until 100).map(i => s"""{"value": "spark query doc $i"}""")
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    def persistAll(): Unit = {
+      val q = StreamOps.persistClassified(
+        StreamOps.classifyStream(
+          spark.readStream.schema("value STRING").json(inDir.toString)),
+        s"$dir/out", s"$dir/ckpt")
+      try q.processAllAvailable() finally q.stop()
+    }
+    def files() = Option(new java.io.File(s"$dir/out/batch_id=0").list())
+      .toSet.flatten.filter(_.endsWith(".parquet"))
+    persistAll()
+    assert(spark.read.parquet(s"$dir/out").count() == 100)
+    val firstWrite = files()
+    // a crash between the sink write and the checkpoint commit: batch 0's
+    // offsets are logged, its commit is not
+    val commit = Paths.get(dir, "ckpt", "commits", "0")
+    Files.delete(commit)
+    Files.delete(Paths.get(dir, "ckpt", "commits", ".0.crc"))
+    persistAll()
+    val persisted = spark.read.parquet(s"$dir/out")
+    assert(persisted.count() == 100, "a replayed batch must not be appended twice")
+    // anti-vacuity: batch 0 really ran again and rewrote its directory
+    assert(Files.exists(commit), "restart must replay and re-commit batch 0")
+    assert(files().nonEmpty && files() != firstWrite)
+    assert(persisted.select("batch_id").distinct().collect()
+      .map(_.getAs[Number](0).longValue).toSet == Set(0L))
   }
 
   test("streaming OHLC: finalised bars equal the batch twin, ties by event_id") {
