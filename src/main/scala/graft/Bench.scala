@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query seconds at the
   * SPARK_GRAFT_SF_DIR scale factor.
   *
@@ -334,32 +332,14 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.graft.fasthash", "true")
-    spark.conf.set("spark.graft.validation.cap.docs", "5000")
-    spark.conf.set("spark.graft.validation.cap.vecs", "2000")
-    // SPARK_GRAFT_CONF="k=v;k=v": extra session confs for measurement
-    // toggles (e.g. spark.graft.er.widen=false for the SCALE.md №20
-    // before/after). Applied last so a toggle can override the
-    // defaults above; inherited by isolated-rerun children via the
-    // ProcessBuilder's copied environment. The parsed overrides are
-    // echoed into every emitted JSON line ("conf_overrides") so each
+    val cpus = GraftSession.benchCpus
+    val spark = GraftSession.bench()
+    // The parsed SPARK_GRAFT_CONF overrides (inherited by isolated-rerun
+    // children via the ProcessBuilder's copied environment) are echoed
+    // into every emitted JSON line ("conf_overrides") so each
     // measurement is self-describing — a stale exported toggle can no
     // longer skew a recorded number without a marker.
-    val confOverrides: Seq[(String, String)] =
-      sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';').toSeq
-        .flatMap { kv =>
-          kv.split("=", 2) match {
-            case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
-            case _ => None
-          }
-        })
-    confOverrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    val confOverrides = GraftSession.confOverrides
     // r15 advice: the overrides are interpolated into the JSON lines
     // the driver and history tooling parse — escape JSON-significant
     // characters (and last-wins dedup duplicate keys) so a quote or

@@ -16,19 +16,24 @@ import org.apache.spark.sql.SparkSession
   *    conf is a compatibility keep, not a semantic switch.
   */
 object GraftSession {
-  private val warehouseDir =
-    s"/tmp/graft-warehouse-${ProcessHandle.current().pid()}"
 
-  // per-process warehouse dirs would otherwise accumulate in /tmp, one
-  // per bench/verify/test JVM (~tens of MB each once q44 has written
-  // its bucketed tables)
-  sys.addShutdownHook {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(): Unit
+  /** A per-process scratch dir `/tmp/graft-<name>-<pid>` (not created
+    * here), removed recursively on JVM exit: per-process dirs would
+    * otherwise accumulate in /tmp, one per bench/verify/test JVM. */
+  def scratchDir(name: String): String = {
+    val dir = s"/tmp/graft-$name-${ProcessHandle.current().pid()}"
+    sys.addShutdownHook {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
+        f.delete(): Unit
+      }
+      rm(new java.io.File(dir))
     }
-    rm(new java.io.File(warehouseDir))
+    dir
   }
+
+  // ~tens of MB per JVM once q44 has written its bucketed tables
+  private val warehouseDir = scratchDir("warehouse")
 
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
@@ -55,5 +60,37 @@ object GraftSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Cores of the [[bench]] session: `SPARK_GRAFT_CPUS`, default 4. */
+  def benchCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** `SPARK_GRAFT_CONF="k=v;k=v"`: extra session confs for measurement
+    * toggles, applied last by [[bench]] so a toggle can override the
+    * bench defaults. */
+  def confOverrides: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';').toSeq
+      .flatMap { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
+          case _ => None
+        }
+      })
+
+  /** Bench conditions, the one session [[Bench]] and [[Profile]] measure
+    * under: `local[`[[benchCpus]]`]` at the same shuffle width, fasthash,
+    * the validation caps, then [[confOverrides]]. */
+  def bench(): SparkSession = {
+    val cpus = benchCpus
+    val spark = configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark.conf.set("spark.graft.fasthash", "true")
+    spark.conf.set("spark.graft.validation.cap.docs", "5000")
+    spark.conf.set("spark.graft.validation.cap.vecs", "2000")
+    confOverrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark
   }
 }

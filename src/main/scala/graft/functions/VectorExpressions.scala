@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -135,32 +136,48 @@ case class CosineSimilarityD(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-scoped registration so the expressions are reachable from SQL
-  * (`expr("cosine_sim(a, b)")`) without depending on Spark's non-public
-  * Column constructors. Idempotent. */
+/** The engine's SQL function surface, declared once: the expressions are
+  * reachable from SQL (`expr("cosine_sim(a, b)")`) without Spark's
+  * non-public Column constructors. [[graft.plans.GraftExtensions]]
+  * injects [[table]] session-wide; [[register]] installs it per session. */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim_d", exprs => CosineSimilarityD(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head, md5Mode = simhashMd5Arg(exprs)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_edit_distance", exprs => BoundedEditDistance(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_explode", exprs => NGramExplode(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch", exprs => KmvSketchAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
+  type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private[graft] def entry(cls: Class[_], name: String)(
+      builder: Seq[Expression] => Expression): Entry =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  private def intArg(e: Expression): Int =
+    e.eval().asInstanceOf[Number].intValue()
+
+  private[graft] val table: Seq[Entry] = Seq(
+    entry(classOf[CosineSimilarity], "cosine_sim")(
+      e => CosineSimilarity(e(0), e(1))),
+    entry(classOf[CosineSimilarityD], "cosine_sim_d")(
+      e => CosineSimilarityD(e(0), e(1))),
+    entry(classOf[DotProduct], "dot_product")(e => DotProduct(e(0), e(1))),
+    entry(classOf[SimHash64], "simhash64")(
+      e => SimHash64(e.head, md5Mode = simhashMd5Arg(e))),
+    entry(classOf[WordShingles], "word_shingles")(
+      e => WordShingles(e(0), intArg(e(1)))),
+    entry(classOf[BoundedEditDistance], "bounded_edit_distance")(
+      e => BoundedEditDistance(e(0), e(1), intArg(e(2)))),
+    entry(classOf[NGramExplode], "ngram_explode")(
+      e => NGramExplode(e(0), intArg(e(1)))),
+    entry(classOf[KmvSketchAgg], "kmv_sketch")(
+      e => KmvSketchAgg(e(0), intArg(e(1)))))
+
+  /** Installs the [[table]] entries `spark`'s session lacks. */
+  def register(spark: SparkSession): Unit = registerMissing(spark, table)
+
+  /** Installs each entry `spark`'s session lacks: re-registering a name
+    * replaces its entry and logs a WARN on every call. */
+  private[graft] def registerMissing(
+      spark: SparkSession, entries: Seq[Entry]): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    entries.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
   }
 
   /** Optional 2nd arg of `simhash64`: a literal hash-family name —

@@ -1328,19 +1328,9 @@ object CleanCorpus {
   }
 
   // ---------------------------------------------------------------- p20
-  /** Per-process scratch base for p20's staging/published release dirs,
-    * removed on JVM exit (the GraftSession warehouse-dir discipline). */
-  private lazy val releaseScratch: String = {
-    val dir = s"/tmp/graft-release-${ProcessHandle.current().pid()}"
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(dir))
-    }
-    dir
-  }
+  /** Per-process scratch base for p20's staging/published release dirs. */
+  private lazy val releaseScratch: String =
+    graft.GraftSession.scratchDir("release")
 
   /** Curated-release PUBLISH (r10 verdict ask #2) — the one command from
     * raw documents to an atomically-published, audited, carded corpus

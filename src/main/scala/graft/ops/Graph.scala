@@ -346,19 +346,9 @@ object Graph {
   }
 
   // ---------------------------------------------------------------- g05
-  /** Per-process scratch root for materialised projections, removed on
-    * JVM exit (the in09/warehouse discipline). */
-  private lazy val projScratch: String = {
-    val dir = s"/tmp/graft-proj-${ProcessHandle.current().pid()}"
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(dir))
-    }
-    dir
-  }
+  /** Per-process scratch root for materialised projections. */
+  private lazy val projScratch: String =
+    graft.GraftSession.scratchDir("proj")
 
   private val projLock = new Object
 

@@ -1,13 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Q
-import graft.functions.{HeadSummary, KeywordClassify, KeywordLexicon}
+import graft.functions.{GraftFunctions, HeadSummary, KeywordClassify, KeywordLexicon}
 import graft.model.Tables
 
 /** The reference's news pipeline (SURVEY.md §2.3–2.5, §2.9, §3.2),
@@ -77,21 +75,15 @@ object NewsPipeline {
     * they reach the DataFrame API through the session's function
     * registry: once per session via [[withKernels]], or session-wide
     * from [[graft.plans.GraftExtensions]]. */
-  private[graft] val kernelFunctions
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("keyword_classify"),
-      new ExpressionInfo(classOf[KeywordClassify].getName, "keyword_classify"),
-      (exprs: Seq[Expression]) => KeywordClassify(exprs.head, keywordLexicon)),
-    (FunctionIdentifier("head_summary"),
-      new ExpressionInfo(classOf[HeadSummary].getName, "head_summary"),
-      (exprs: Seq[Expression]) => HeadSummary(exprs.head)))
+  private[graft] val kernelFunctions: Seq[GraftFunctions.Entry] = Seq(
+    GraftFunctions.entry(classOf[KeywordClassify], "keyword_classify")(
+      e => KeywordClassify(e.head, keywordLexicon)),
+    GraftFunctions.entry(classOf[HeadSummary], "head_summary")(
+      e => HeadSummary(e.head)))
 
   /** Registers [[kernelFunctions]] on `df`'s session unless present. */
   private def withKernels(df: DataFrame): DataFrame = {
-    val registry = df.sparkSession.sessionState.functionRegistry
-    kernelFunctions.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
-    }
+    GraftFunctions.registerMissing(df.sparkSession, kernelFunctions)
     df
   }
 

@@ -1783,19 +1783,9 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** Per-process scratch base for s18's/s19's bucketed index artifacts,
-    * removed on JVM exit (the Ingest compactScratch discipline). */
-  private lazy val annScratch: String = {
-    val dir = s"/tmp/graft-ann-${ProcessHandle.current().pid()}"
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(dir))
-    }
-    dir
-  }
+  /** Per-process scratch base for s18's/s19's bucketed index artifacts. */
+  private lazy val annScratch: String =
+    graft.GraftSession.scratchDir("ann")
 
   // ---------------------------------------------------------------- s18
   /** [[s17]]'s traversal over a BUCKETED on-disk index — the production

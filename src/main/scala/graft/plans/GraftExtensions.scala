@@ -1,26 +1,21 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-import graft.functions.{BoundedEditDistance, CosineSimilarity,
-  CosineSimilarityD, DotProduct, KmvSketchAgg, NGramExplode, SimHash64,
-  WordShingles}
+import graft.functions.{DotProduct, GraftFunctions}
 
 /** Engine registration via `SparkSessionExtensions` (the custom planner
   * seam of SURVEY.md §4/§7.3 — the only one this engine needs):
   *
   *  - `injectFunction`: the engine's whole SQL function surface —
-  *    `cosine_sim` / `cosine_sim_d` / `dot_product` / `simhash64` /
-  *    `word_shingles` / `bounded_edit_distance` / `ngram_explode` /
-  *    `kmv_sketch` (every builder `GraftFunctions.register` installs
-  *    per-session) and the news pipeline's `keyword_classify` /
-  *    `head_summary` kernels (`NewsPipeline.kernelFunctions`) — becomes
-  *    session functions with no per-query registry calls;
+  *    [[GraftFunctions.table]] and the news pipeline's
+  *    `keyword_classify` / `head_summary` kernels
+  *    (`NewsPipeline.kernelFunctions`) — becomes session functions with
+  *    no per-query registry calls;
   *  - `injectOptimizerRule`: [[RewriteDotProducts]] — auto-vectorisation
   *    of the built-in higher-order-function dot-product idiom into the
   *    codegen'd [[graft.functions.DotProduct]] loop — and
@@ -33,48 +28,8 @@ import graft.functions.{BoundedEditDistance, CosineSimilarity,
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head,
-        md5Mode = graft.functions.GraftFunctions.simhashMd5Arg(exprs))))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    // the rest of the engine's SQL function surface (the same builders
-    // GraftFunctions.register installs per-session) so a
-    // `spark.sql.extensions`-activated deployment needs no registry call
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim_d"),
-      new ExpressionInfo(classOf[CosineSimilarityD].getName, "cosine_sim_d"),
-      (exprs: Seq[Expression]) => CosineSimilarityD(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("bounded_edit_distance"),
-      new ExpressionInfo(classOf[BoundedEditDistance].getName,
-        "bounded_edit_distance"),
-      (exprs: Seq[Expression]) => BoundedEditDistance(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("ngram_explode"),
-      new ExpressionInfo(classOf[NGramExplode].getName, "ngram_explode"),
-      (exprs: Seq[Expression]) => NGramExplode(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_sketch"),
-      (exprs: Seq[Expression]) => KmvSketchAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    graft.ops.NewsPipeline.kernelFunctions.foreach(e.injectFunction)
+    (GraftFunctions.table ++ graft.ops.NewsPipeline.kernelFunctions)
+      .foreach(e.injectFunction)
     e.injectOptimizerRule(_ => RewriteDotProducts)
     e.injectOptimizerRule(_ => RewriteTopKPerKey)
     e.injectPlannerStrategy(_ => TopKPerKeyStrategy)

@@ -339,19 +339,9 @@ object Ingest {
     (sum(conv(substring(md5(concat(cols: _*)), 1, 8), 16, 10)
       .cast("decimal(38,0)")) % lit(4294967296L)).cast("long")
 
-  /** Per-process scratch base for in09's fragmented/compacted tables,
-    * removed on JVM exit (the GraftSession warehouse-dir discipline). */
-  private lazy val compactScratch: String = {
-    val dir = s"/tmp/graft-compact-${ProcessHandle.current().pid()}"
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(dir))
-    }
-    dir
-  }
+  /** Per-process scratch base for in09's fragmented/compacted tables. */
+  private lazy val compactScratch: String =
+    graft.GraftSession.scratchDir("compact")
 
   /** Small-file compaction as an OPERATIVE catalog query (r06 verdict
     * #5; `CompactionSpec` was documentation-plus-spec before): write a

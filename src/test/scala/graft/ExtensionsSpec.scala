@@ -34,6 +34,19 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("every SQL function-table entry resolves in an extension session") {
+    val entries =
+      functions.GraftFunctions.table ++ ops.NewsPipeline.kernelFunctions
+    withExtensionSession { ext =>
+      val registry = ext.sessionState.functionRegistry
+      entries.foreach { case (id, info, builder) =>
+        assert(registry.lookupFunction(id).map(_.getClassName) ==
+          Some(info.getClassName), id)
+        assert(registry.lookupFunctionBuilder(id).contains(builder), id)
+      }
+    }
+  }
+
   test("RewriteDotProducts: built-in aggregate/zip_with idiom becomes DotProduct") {
     withExtensionSession { ext =>
       // parquet-backed source: a literal LocalRelation would be
