@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   *    native `timestamp[us]`. Both storage dtypes flow through the
   *    adaptive [[graft.ops.EventStreams.eventTs]] accessor family, so the
   *    conf is a compatibility keep, not a semantic switch.
+  *  - `spark.sql.extensions` = [[graft.plans.GraftExtensions]], the path a
+  *    `spark-submit --conf` deployment takes: every session built here,
+  *    and every `newSession()` of one, has the engine's SQL functions and
+  *    its two optimizer rewrites.
   */
 object GraftSession {
 
@@ -45,13 +49,8 @@ object GraftSession {
     // Per-process dir: two JVMs (bench + tests) sharing one warehouse
     // would interleave q44's DROP/delete/saveAsTable on the same paths
     .config("spark.sql.warehouse.dir", warehouseDir)
-
-  /** Apply engine configs to an already-constructed session (used when the
-    * driver harness owns the builder). Only dynamic confs can be set here. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark
-  }
+    .config("spark.sql.extensions",
+      classOf[graft.plans.GraftExtensions].getName)
 
   def local(cores: Int = 4): SparkSession = {
     val s = configure(SparkSession.builder()

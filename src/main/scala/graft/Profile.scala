@@ -154,6 +154,10 @@ object Profile {
         case other =>
           other.children.view.flatMap(pinned(_, passed)).headOption
       }
+    // expression ids come from a JVM-wide counter: strip them so two
+    // sweeps print the same lines
+    def keys(spec: Seq[_]): String =
+      spec.mkString(",").replaceAll("#\\d+L?", "").take(40)
     for (q <- qs) {
       try {
         val plan = initial(q.run(spark, sfDir).queryExecution.executedPlan)
@@ -161,10 +165,10 @@ object Profile {
           case w: WindowGroupLimitExec
               if pinned(w.child).isDefined =>
             s"PARTIAL-RANK-AT-SCAN-WIDTH over ${pinned(w.child).get} " +
-              s"(partitionBy=${w.partitionSpec.mkString(",").take(40)})"
+              s"(partitionBy=${keys(w.partitionSpec)})"
           case w: WindowExec if pinned(w.child).isDefined =>
             s"WINDOW-AT-SCAN-WIDTH over ${pinned(w.child).get} " +
-              s"(partitionBy=${w.partitionSpec.mkString(",").take(40)})"
+              s"(partitionBy=${keys(w.partitionSpec)})"
           case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
             s"WindowGroupLimit(global)"
           case w: WindowExec

@@ -139,7 +139,8 @@ case class CosineSimilarityD(left: Expression, right: Expression)
 /** The engine's SQL function surface, declared once: the expressions are
   * reachable from SQL (`expr("cosine_sim(a, b)")`) without Spark's
   * non-public Column constructors. [[graft.plans.GraftExtensions]]
-  * injects [[table]] session-wide; [[register]] installs it per session. */
+  * injects [[table]] into every `GraftSession.configure` session;
+  * [[register]] installs it on a session built elsewhere. */
 object GraftFunctions {
   type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 

@@ -486,13 +486,14 @@ object CleanCorpus {
     * sampled doc_id, not a count.
     *
     * The production path is the native [[graft.plans.TopKPerKey]]
-    * operator (q46's tier) rewriting the portable `row_number() <= k`
-    * idiom: per-map-partition bounded heaps forward AT MOST k rows per
-    * stratum into the exchange, so the shuffle is sample-sized —
-    * ≤ k·|strata| rows per map partition — while the window plan would
-    * shuffle and SORT the whole corpus per stratum. `CorpusOpsSpec`
-    * pins plan shape (2 heap nodes, zero Window/Sort), parity with the
-    * un-rewritten window twin, and exact stratum sizes min(k, |s|). */
+    * operator (q46's tier, installed by [[graft.GraftSession.configure]])
+    * rewriting the portable `row_number() <= k` idiom: per-map-partition
+    * bounded heaps forward AT MOST k rows per stratum into the exchange,
+    * so the shuffle is sample-sized — ≤ k·|strata| rows per map
+    * partition — while the window plan would shuffle and SORT the whole
+    * corpus per stratum. `CorpusOpsSpec` pins plan shape (2 heap nodes,
+    * zero Window/Sort), parity with the same body run with the rewrite
+    * excluded, and exact stratum sizes min(k, |s|). */
   val SampleSeed = "sample-0"
   val SampleK = 50
 
@@ -510,24 +511,8 @@ object CleanCorpus {
        |  FROM keyed)
        |WHERE rn <= $SampleK
        |ORDER BY lang, source, doc_id""".stripMargin) { (s, d) =>
-    stratifiedSample(s, d, native = true)
-  }
-
-  /** p09's body; `native` toggles the TopKPerKey rewrite on an isolated
-    * session (the q46 anti-vacuity convention). */
-  private[graft] def stratifiedSample(
-      s: SparkSession, d: String, native: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.session.timeZone",
-      s.conf.get("spark.sql.session.timeZone"))
-    s2.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.sql.shuffle.partitions"))
-    if (native) {
-      s2.experimental.extraOptimizations = Seq(graft.plans.RewriteTopKPerKey)
-      s2.experimental.extraStrategies = Seq(graft.plans.TopKPerKeyStrategy)
-    }
-    Tables.documents(s2, d)
+    Tables.documents(s, d)
       .selectExpr("lang", "source", "doc_id",
         s"CAST(conv(substr(md5(concat('$SampleSeed:', CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) AS h")
       .withColumn("rn", row_number().over(
@@ -550,8 +535,8 @@ object CleanCorpus {
     * pins every sampled doc_id. Quotas above n_s self-cap (rank can't
     * exceed the stratum). Scale shape: counts are one map-side-combined
     * agg; the quota table is sources-sized and broadcast; ranking is one
-    * keyed window per source (the p09 TopKPerKey rewrite applies when
-    * activated). */
+    * keyed window per source (the rank bound is a column, so p09's
+    * constant-bound TopKPerKey rewrite does not apply). */
   val TempBudget = 200
 
   /** p10's quota derivation over any `(doc_id, source)` frame: per-source
@@ -953,7 +938,6 @@ object CleanCorpus {
       |              ELSE d3 * 1000000 // (n0 - d1 - d2) END AS BIGINT)
       |  FROM agg)
       |ORDER BY stage_no""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val sh = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
@@ -1134,7 +1118,6 @@ object CleanCorpus {
       |CROSS JOIN med
       |ORDER BY ov.src_a, ov.src_b""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val sh = Tables.documents(s, d)
       .select(col("source"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
@@ -1246,7 +1229,6 @@ object CleanCorpus {
 
   /** p18's dataflow, unsorted — shared by [[p18]] and [[p19]]. */
   private def curatedCorpus(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // ONE corpus scan: stats + fingerprint + token array in a single
     // projection, checkpointed — the cascade's sole parquet read
     val corpus = TextAnalysis.gopherStats(Tables.documents(s, d),

@@ -39,7 +39,6 @@ object Dedup {
     * interpreted per shingle and dominated this scan stage). The oracle
     * SQL keeps the 1-based list_transform formulation — same values. */
   private def shingles(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // №27: the shingle explode + the distinct's map-side partial agg
     // ride the single-split documents scan at bench SFs — spread to
     // session width first (a no-op on any wide corpus). Serves every
@@ -271,7 +270,6 @@ object Dedup {
     // cheaper than the extra shuffle a dedup-then-join formulation costs
     // (both were measured; the pipelined version wins ~2×). Same values —
     // the oracle computes per distinct posting and min agrees.
-    graft.functions.GraftFunctions.register(s)
     // №27 measured NON-case: spreading this scan was tried in r16 and
     // REGRESSED d03 1.00 → 2.11 s isolated — the short-doc minhash
     // kernel is ~0.2 s of single-core work, less than the 32-task
@@ -316,7 +314,6 @@ object Dedup {
       |    AS cos
       |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
       |SELECT i, j FROM pairs WHERE cos >= 0.4 ORDER BY i, j""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     // №27: the theta join streams one side through the single-split
     // embeddings scan — spread it so the fused cosine comparator runs
     // at session width in the nested-loop regime.
@@ -868,7 +865,6 @@ object Dedup {
        |SELECT m.vec_id, m.cid, rem.vec_id IS NULL AS kept
        |FROM m LEFT JOIN rem ON rem.vec_id = m.vec_id
        |ORDER BY m.vec_id""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val (means, _, _) = Similarity.kmeansLloyd(e0, maxIters = 2)
     val c = Similarity.pivotCentroids(means).localCheckpoint()
@@ -1036,7 +1032,6 @@ object Dedup {
     * built-in Levenshtein's own pattern): the verify predicate stays
     * inside whole-stage codegen. */
   val d17 = Q("d17_lsh_editdist_banded", d12.oracle.get) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     d03.run(s, d)
       .join(docs.select(col("doc_id").as("i"), col("text").as("ta")), "i")
@@ -1104,7 +1099,6 @@ object Dedup {
        |FROM common c JOIN exn n USING (ex_id)
        |WHERE CAST(common AS DOUBLE) / n.c >= 0.9
        |ORDER BY ex_id, doc_id""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     // r16: same materialise-once as d06 (toggle A/B measured d16 1.41×
     // slower with the spread shingle subtree recomputed per consumer)
     val sh = shingles(Tables.documents(s, d)).localCheckpoint()
@@ -1491,7 +1485,6 @@ object Dedup {
        |$cfgSql)
        |ORDER BY b DESC""".stripMargin
   }) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val sh = Width.spread(Tables.documents(s, d).select("doc_id", "text"))
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
@@ -1515,19 +1508,21 @@ object Dedup {
       .select("i", "j")
       .localCheckpoint()
     val nTruth = truth.count()
-    // ALL configs evaluate over one config-tagged union: one bucket agg,
-    // one banded self-join, one truth join - 3 jobs for the whole sweep
-    // instead of 3 per config (measured 5.5 s -> the union costs the
-    // same rows but 4x fewer job launches and one shared shuffle each)
+    // ALL configs evaluate over one config-tagged band table: one bucket
+    // agg, one banded self-join, one truth join - 3 jobs for the whole
+    // sweep instead of 3 per config. One explode yields a doc's 15
+    // (cfg, band) rows, so each consumer scans sigs once
     val configs = Seq((8, 1), (4, 2), (2, 4), (1, 8))
-    val bandsAll = configs.flatMap { case (nb, nr) =>
-      (0 until nb).map { b =>
-        sigs.select(lit(nb * 100 + nr).as("cfg"), col("doc_id"),
-          lit(b).as("band"),
-          concat_ws("_", (0 until nr).map(r => col(s"h${b * nr + r}")): _*)
-            .as("sig"))
-      }
-    }.reduce(_ unionByName _)
+    val bandsAll = sigs.select(col("doc_id"), explode(array(
+      configs.flatMap { case (nb, nr) =>
+        (0 until nb).map { b =>
+          struct(lit(nb * 100 + nr).as("cfg"), lit(b).as("band"),
+            concat_ws("_", (0 until nr).map(r => col(s"h${b * nr + r}")): _*)
+              .as("sig"))
+        }
+      }: _*)).as("bd"))
+      .select(col("bd.cfg").as("cfg"), col("doc_id"),
+        col("bd.band").as("band"), col("bd.sig").as("sig"))
     val workloads = bandsAll.groupBy("cfg", "band", "sig")
       .agg(count(lit(1)).as("n"))
       .groupBy("cfg")
@@ -1621,7 +1616,6 @@ object Dedup {
        |FROM (SELECT doc_id FROM documents WHERE doc_id % 4 = 0) d
        |LEFT JOIN best b ON b.new_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     // №27 measured NON-case: a spread here regressed d21 1.9 → 4.6 s
     // isolated (r16) — the frame fans out to four consumers, so the
     // added exchange re-enters four plans while each kernel is light.

@@ -110,7 +110,6 @@ object EntityResolution {
     } else df
 
   private[graft] def scoredPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cust = maybeWiden(s, Tables.customer(s, d), "c_custkey")
     maybeWiden(s, registry(s, d), "b_id")
       .join(cust, col("nat_b") === col("c_nationkey") &&
@@ -151,7 +150,6 @@ object EntityResolution {
     * pass set chosen from the score structure instead of heuristics.
     * `EntityResolutionSpec` pins link-for-link equality with [[links]]. */
   private[graft] def linksProd(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cust = Tables.customer(s, d)
     registry(s, d)
       .join(cust, col("nat_b") === col("c_nationkey") &&
@@ -394,7 +392,6 @@ object EntityResolution {
       |  SELECT 'nation_segment_cents', c2.cand, t2, l2, na, nb, n_true, nlink
       |  FROM c2, sizes, ta)
       |ORDER BY scheme""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val cust = Tables.customer(s, d)
     val reg = registry(s, d).localCheckpoint() // four consumers below
     val blk1 = col("nat_b") === col("c_nationkey") &&
@@ -572,7 +569,6 @@ object EntityResolution {
       |ORDER BY b_id, a_custkey""".stripMargin
   }) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val w = SnWindow
     val recs = registry(s, d)
       .selectExpr("nat_b AS nat", "name_b AS nm", "'b' AS src",
@@ -836,7 +832,6 @@ object EntityResolution {
     * sampled join + DP run full-width with no pair-sized shuffle. */
   private[graft] def scoredPairsSampled(
       s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     maybeWiden(s,
       registry(s, d).filter(expr(sideSampleSpark("b_id"))), "b_id")
       .join(maybeWiden(s, Tables.customer(s, d)

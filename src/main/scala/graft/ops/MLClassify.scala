@@ -1757,7 +1757,6 @@ object MLClassify {
        |  CAST(sum(sgn * cnt) AS BIGINT) AS signed_sum
        |FROM hashed GROUP BY dim
        |ORDER BY dim""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val tc = Tables.documents(s, d)
       .select(split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 2)
@@ -2109,7 +2108,6 @@ object MLClassify {
        |       true_label = pred_label AS correct
        |FROM pred WHERE r = 1 ORDER BY query_id""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val e = graft.ops.Dedup.validationCap(s, Tables.embeddings(s, d),
       "vec_id", "spark.graft.validation.cap.vecs")
       .select(col("vec_id"), col("embedding"), col("label"))

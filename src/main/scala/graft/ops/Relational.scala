@@ -1794,8 +1794,8 @@ object Relational {
     * planner strategy, and a two-phase bounded-heap physical operator.
     * The query body is the PORTABLE idiom — `row_number()` over
     * (partition by custkey, order by totalprice desc, orderkey) filtered
-    * to ≤ 3 and dropped — and the session-scoped
-    * `experimental.{extraOptimizations, extraStrategies}` swap Spark's
+    * to ≤ 3 and dropped — and [[graft.plans.GraftExtensions]], installed
+    * by [[graft.GraftSession.configure]], swaps Spark's
     * shuffle→sort→Window→filter plan for heap-partial → exchange →
     * heap-final: no sort buffer, no rank projection, and the shuffle
     * carries at most 3·keys rows per map partition (the map-side-combine
@@ -1803,7 +1803,7 @@ object Relational {
     * (orderkey tiebreak) so the answer is deterministic and the oracle
     * is the plain window SQL; `TopKSpec` pins plan shape (2 heap nodes,
     * zero Window/Sort below the final orderBy) and value parity against
-    * the un-rewritten session. */
+    * the same body with the rewrite excluded. */
   val q46 = Q("q46_native_topk",
     """SELECT o_custkey, o_orderkey, o_totalprice FROM (
       |  SELECT o_custkey, o_orderkey, o_totalprice,
@@ -1812,27 +1812,10 @@ object Relational {
       |  FROM orders)
       |WHERE rn <= 3
       |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s, d) =>
-    nativeTopK(s, d, native = true)
-  }
-
-  /** q46's body; `native` toggles the TopKPerKey rewrite+strategy on an
-    * isolated `newSession()` so the audit can prove result invariance
-    * (the anti-vacuity twin — same rows with Spark's window plan). */
-  private[graft] def nativeTopK(
-      s: SparkSession, d: String, native: Boolean): DataFrame = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.session.timeZone",
-      s.conf.get("spark.sql.session.timeZone"))
-    s2.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.sql.shuffle.partitions"))
-    if (native) {
-      s2.experimental.extraOptimizations = Seq(graft.plans.RewriteTopKPerKey)
-      s2.experimental.extraStrategies = Seq(graft.plans.TopKPerKeyStrategy)
-    }
     val w = Window
       .partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    Tables.orders(s2, d)
+    Tables.orders(s, d)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
@@ -1886,7 +1869,6 @@ object Relational {
       |                 // kth_hash AS BIGINT) END AS est_distinct,
       |  state
       |FROM summ ORDER BY colname""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val ev = Tables.events(s, d)
     val src = ev.selectExpr("'user_id' AS colname", kmvHashSpark("user_id"))
       .unionAll(ev.selectExpr("'event_type' AS colname", kmvHashSpark("event_type")))

@@ -84,7 +84,6 @@ object Similarity {
        |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
        |FROM ranked WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     // O(Q·n) brute-force validation twin of s02/s03 — bounded at bench
     // time by the same deterministic cap as Dedup's quadratic twins.
     val e = Dedup.validationCap(s, Tables.embeddings(s, d), "vec_id",
@@ -122,7 +121,6 @@ object Similarity {
        |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
        |FROM ranked WHERE rank <= 3
        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     val b = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), expr(bucketSpark).as("bucket"))
     val x = b.as("x")
@@ -206,7 +204,6 @@ object Similarity {
        |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
        |FROM ranked WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val c = centroidTable(e)
     val assign = assignToCentroids(e, c)
@@ -312,7 +309,6 @@ object Similarity {
        |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
        |FROM ranked WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     // №27: the ×8 subvector explode and 128 subD2 evals per vector ride
     // the single embeddings split — spread to session width first.
     val e = graft.ops.Width.spread(
@@ -401,7 +397,6 @@ object Similarity {
        |CROSS JOIN (SELECT unnest(range(1, 65)) AS k)
        |GROUP BY 1, 2
        |ORDER BY 1, 2""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val assign = assignToCentroids(e, centroidTable(e))
     e.join(assign, "vec_id")
@@ -597,7 +592,6 @@ object Similarity {
        |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
        |FROM ranked WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val (means, _, _) = kmeansLloyd(e0, maxIters = 2)
     val c = pivotCentroids(means).localCheckpoint()
@@ -678,7 +672,6 @@ object Similarity {
        |SELECT vec_id, neighbor_id, CAST(rank AS BIGINT) AS rank
        |FROM ranked WHERE rank <= 3
        |ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     knnGraphEdges(s, e).orderBy("vec_id", "rank")
   }
@@ -927,7 +920,6 @@ object Similarity {
        |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
        |FROM ranked WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    GraftFunctions.register(s)
     // №27: SQ8 coding + the broadcast shortlist dot products ride the
     // single embeddings split — spread to session width first.
     val e0 = graft.ops.Width.spread(
@@ -1050,7 +1042,6 @@ object Similarity {
        |FROM ranked WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin
   }) { (s, d) =>
-    GraftFunctions.register(s)
     val b = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
         expr("CAST(1 + label % 4 AS DOUBLE)").as("w"),
@@ -1123,7 +1114,6 @@ object Similarity {
     * un-checkpointed so `PlanAuditSpec` can audit the live plan — the
     * g01 `pageRankRound` convention. */
   private[graft] def mmrShortlist(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val q = e.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -1185,7 +1175,6 @@ object Similarity {
        |SELECT query_id, cid AS neighbor_id, CAST(rank AS BIGINT) AS rank
        |FROM sel5 ORDER BY query_id, rank""".stripMargin
   }) { (s, d) =>
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val wRel = Window.partitionBy("query_id")
       .orderBy(col("rel").desc, col("cid"))
@@ -1294,7 +1283,6 @@ object Similarity {
        |$rowsSql)
        |ORDER BY nprobe""".stripMargin
   }) { (s, d) =>
-    GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val c = centroidTable(e)
@@ -1395,7 +1383,6 @@ object Similarity {
        |ORDER BY query_id, rank""".stripMargin
 
   val s14 = Q("s14_filtered_topk", filteredAnnSql) { (s, d) =>
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
     val c = centroidTable(e)
@@ -1433,7 +1420,6 @@ object Similarity {
     * exposed for `SimilaritySpec`'s selectivity measurement. */
   private[graft] def s14CandidateCount(s: SparkSession, d: String,
       filtered: Boolean): Long = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
     val c = centroidTable(e)
@@ -1520,7 +1506,6 @@ object Similarity {
        |FROM ranked WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin
   }) { (s, d) =>
-    GraftFunctions.register(s)
     def word(base: Int): String = {
       val weights = (0 until 32).map(i => s"${1L << i}L").mkString(", ")
       s"""aggregate(zip_with(slice(embedding, ${base + 1}, 32),
@@ -1727,7 +1712,6 @@ object Similarity {
   }
 
   val s17 = Q("s17_graph_ann_topk", graphAnnSql) { (s, d) =>
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       .localCheckpoint() // graph build + every hop's embedding fetch
     val edges = knnGraphEdges(s, e).select("vec_id", "neighbor_id")
@@ -1811,7 +1795,6 @@ object Similarity {
     * `SimilaritySpec` pins row-for-row equality of the two tiers (the
     * d05↔d07/d09 validation-vs-production discipline). */
   val s18 = Q("s18_graph_ann_bucketed", graphAnnSql) { (s, d) =>
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       .localCheckpoint() // graph build + the one-time index write
     val nb = math.max(8L, math.min(1024L, e.count() / 256 + 1)).toInt
@@ -1913,7 +1896,6 @@ object Similarity {
     * Cost vs s14 at bench scale is the one-time index write, the same
     * amortized-at-scale tradeoff s18 measured. */
   val s19 = Q("s19_ivf_bucketed_filtered", filteredAnnSql) { (s, d) =>
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
     val c = centroidTable(e)
@@ -2055,7 +2037,6 @@ object Similarity {
     * `SimilaritySpec` pins against [[s04]]. */
   private[graft] def s20Run(s: SparkSession, d: String,
       nprobe: Int): DataFrame = {
-    GraftFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val c = centroidTable(e)
     // PQ encode — s04's encoder: argmin sub-centroid per 8-dim

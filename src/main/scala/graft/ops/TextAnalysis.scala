@@ -314,7 +314,6 @@ object TextAnalysis {
 
   /** Distinct (doc_id, 8-gram shingle) pairs — t07/t14's shared input. */
   private[graft] def shingles8(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 8)
@@ -425,7 +424,6 @@ object TextAnalysis {
       |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
       |    WHERE len(w) >= 2))
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val statsExpr =
       """element_at(transform(array(word_shingles(split(text, ' '), 2)),
         |  g -> named_struct(
@@ -1562,7 +1560,6 @@ object TextAnalysis {
       |       CAST(count(DISTINCT doc_id) AS BIGINT) AS df
       |FROM grams GROUP BY s
       |ORDER BY n DESC, s LIMIT 50""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
@@ -1890,7 +1887,6 @@ object TextAnalysis {
        |    AS novelty_ppm
        |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val sh = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
@@ -2035,7 +2031,6 @@ object TextAnalysis {
        |FROM lagd
        |ORDER BY octave""".stripMargin) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val tc = Tables.documents(s, d)
       .select(split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 2)
@@ -2168,7 +2163,6 @@ object TextAnalysis {
        |FROM ws d LEFT JOIN mass ON mass.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin
   }) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val ws = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("w"),
         (length(col("text")) -

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.HIGH_ORDER_FUNCTION
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 import graft.functions.{DotProduct, GraftFunctions}
@@ -23,8 +24,8 @@ import graft.functions.{DotProduct, GraftFunctions}
   *    ([[TopKPerKeyStrategy]]) turns the dropped-rank `row_number() <= k`
   *    window idiom into the sort-free bounded-heap [[TopKPerKeyExec]].
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
+  * Usage: `--conf spark.sql.extensions=graft.plans.GraftExtensions`, which
+  * [[graft.GraftSession.configure]] sets on every session it builds.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
@@ -42,7 +43,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * [[DotProduct]](a, b): one fused codegen loop, no intermediate zipped
   * array, bit-identical values (same ascending fold in double).
   * Users keep writing the portable built-in idiom; plans get the fast
-  * expression — measured ~25× on the d04 pairwise workload. */
+  * expression — measured ~25× on the d04 pairwise workload. Pruned to
+  * plans that contain a higher-order function. */
 object RewriteDotProducts extends Rule[LogicalPlan] {
 
   /** Safe for any element nullability: [[DotProduct]] propagates null
@@ -97,7 +99,8 @@ object RewriteDotProducts extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
+    plan.transformAllExpressionsWithPruning(
+        _.containsPattern(HIGH_ORDER_FUNCTION)) {
       case ArrayAggregate(
           ZipWith(a, b, zipFn: LambdaFunction),
           zero, mergeFn: LambdaFunction, finishFn: LambdaFunction)

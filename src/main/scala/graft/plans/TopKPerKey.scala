@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.WINDOW
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** Native top-k-per-key: the whole-operator Catalyst extension tier
@@ -40,10 +41,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * one expression and it is `row_number()`, (b) the filter is a
   * constant rank bound, (c) the rank column is not referenced above the
   * filter, and (d) partition/order expressions are deterministic —
-  * anything else keeps Spark's plan. Activation: session-scoped via
-  * `spark.experimental.{extraOptimizations, extraStrategies}` (the
-  * catalog query's route, no leakage into sibling queries) or globally
-  * via [[GraftExtensions]].
+  * anything else keeps Spark's plan. Activation: [[GraftExtensions]],
+  * which `graft.GraftSession.configure` installs in every session;
+  * `spark.sql.optimizer.excludedRules=graft.plans.RewriteTopKPerKey`
+  * turns the rewrite off for one session (the specs' window twin).
   */
 case class TopKPerKey(
     keys: Seq[Expression],
@@ -58,10 +59,9 @@ case class TopKPerKey(
 
 /** Rewrites `Project(out, Filter(rn <= k, Window(row_number as rn, p, o)))`
   * — `rn` absent from `out` — into `Project(out, TopKPerKey(p, o, k))`.
-  * Tolerates the `WindowGroupLimit` node `InferWindowGroupLimit` inserts
-  * below the Window when this rule runs late (the
-  * `experimental.extraOptimizations` batch is the optimizer's last):
-  * the heap operator subsumes it. */
+  * Tolerates a `WindowGroupLimit` node below the Window, which
+  * `InferWindowGroupLimit` inserts if it ran first: the heap operator
+  * subsumes it. Pruned to plans that contain a Window. */
 object RewriteTopKPerKey extends Rule[LogicalPlan] {
 
   /** The rank bound ⇒ top-k count, for the comparison shapes the filter
@@ -97,22 +97,23 @@ object RewriteTopKPerKey extends Rule[LogicalPlan] {
     case other => other
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case p @ Project(projectList,
-        Filter(cond, Window(Seq(al @ Alias(
-          WindowExpression(_: RowNumber, _), _)), partitionSpec, orderSpec,
-          wchild, _)))
-        if partitionSpec.nonEmpty && orderSpec.nonEmpty &&
-          partitionSpec.forall(_.deterministic) &&
-          orderSpec.forall(_.deterministic) &&
-          !projectList.exists(_.references.contains(al.toAttribute)) =>
-      rankBound(cond, al.toAttribute) match {
-        case Some(k) if k >= 1 =>
-          p.copy(child = TopKPerKey(partitionSpec, orderSpec, k,
-            unlimited(wchild)))
-        case _ => p
-      }
-  }
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformWithPruning(_.containsPattern(WINDOW)) {
+      case p @ Project(projectList,
+          Filter(cond, Window(Seq(al @ Alias(
+            WindowExpression(_: RowNumber, _), _)), partitionSpec, orderSpec,
+            wchild, _)))
+          if partitionSpec.nonEmpty && orderSpec.nonEmpty &&
+            partitionSpec.forall(_.deterministic) &&
+            orderSpec.forall(_.deterministic) &&
+            !projectList.exists(_.references.contains(al.toAttribute)) =>
+        rankBound(cond, al.toAttribute) match {
+          case Some(k) if k >= 1 =>
+            p.copy(child = TopKPerKey(partitionSpec, orderSpec, k,
+              unlimited(wchild)))
+          case _ => p
+        }
+    }
 }
 
 /** Plans [[TopKPerKey]] as final-over-partial [[TopKPerKeyExec]]; the

@@ -1784,7 +1784,6 @@ object Ingest {
        |FROM u ORDER BY scope, colname""".stripMargin
   }) { (s, d) =>
     import graft.ops.Relational.{KmvK, kmvHashSpark}
-    graft.functions.GraftFunctions.register(s)
     val run = java.util.UUID.randomUUID().toString.take(8)
     val dir = s"$compactScratch/$run/ndv_buckets"
     graft.model.Tables.lineitem(s, d)

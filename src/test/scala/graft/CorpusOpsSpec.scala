@@ -322,7 +322,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("p09: native heap plan, window-twin parity, exact stratum sizes") {
-    val native = ops.CleanCorpus.stratifiedSample(spark, sf, native = true)
+    val native = ops.CleanCorpus.p09.run(spark, sf)
     // plan shape: two heap nodes (partial + final), zero Window/Sort
     // below the presentation orderBy
     val heaps = native.queryExecution.sparkPlan.collect {
@@ -331,10 +331,15 @@ class CorpusOpsSpec extends SparkSpec {
     val windows = native.queryExecution.sparkPlan.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
     assert(windows.isEmpty, "window survived the rewrite")
-    // value parity against the un-rewritten window twin
+    // value parity against the window twin: the same body with the
+    // rewrite excluded, which really plans a Window
     val a = native.collect().map(_.toSeq).toSeq
-    val b = ops.CleanCorpus.stratifiedSample(spark, sf, native = false)
-      .collect().map(_.toSeq).toSeq
+    val b = withExcludedRules(plans.RewriteTopKPerKey) {
+      val twin = ops.CleanCorpus.p09.run(spark, sf)
+      assert(twin.queryExecution.sparkPlan.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w }.nonEmpty)
+      twin.collect().map(_.toSeq).toSeq
+    }
     assert(a == b, "native sample drifts from the window twin")
     // stratum sizes are exactly min(k, |stratum|)
     val sizes = native.groupBy("lang", "source").count().collect()

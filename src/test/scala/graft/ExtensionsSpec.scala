@@ -1,43 +1,54 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import graft.plans.{RewriteDotProducts, RewriteTopKPerKey}
+
+/** [[graft.plans.GraftExtensions]] as `GraftSession.configure` installs
+  * it: injected functions, the two optimizer rewrites and their twins
+  * (the same body with the rule excluded), and a source guard that keeps
+  * it the only activation path. */
 class ExtensionsSpec extends SparkSpec {
 
   test("injected functions resolve without manual registration") {
-    withExtensionSession { ext =>
-      import ext.implicits._
-      val r = Seq((Array(1f, 2f), Array(3f, 4f))).toDF("a", "b")
-        .selectExpr("cosine_sim(a, b)", "dot_product(a, b)",
-          "simhash64(array('x', 'y'))")
-        .head()
-      assert(r.getDouble(1) == 11.0)
-      assert(r.getDouble(0) > 0.98)
-      // the full SQL surface: every GraftFunctions.register builder is
-      // also injected, so a spark.sql.extensions deployment never calls
-      // the per-session registry
-      val r2 = Seq((Array(1.0, 2.0), Array(3.0, 4.0), "a b c"))
-        .toDF("da", "db", "txt")
-        .selectExpr("cosine_sim_d(da, db)",
-          "size(word_shingles(split(txt, ' '), 2))",
-          "bounded_edit_distance('kitten', 'sitting', 3)")
-        .head()
-      assert(r2.getDouble(0) > 0.98)
-      assert(r2.getInt(1) == 2)
-      assert(r2.getInt(2) == 3)
-      val gen = Seq(Tuple1("a b c d")).toDF("txt")
-        .selectExpr("ngram_explode(split(txt, ' '), 2) AS g")
-      assert(gen.count() == 3)
-      val kmv = Seq(1L, 2L, 3L).toDF("v")
-        .selectExpr("kmv_sketch(v, 64) AS s").head()
-      // n < k branch: KMV retains all 3 distinct hashes, estimate exact
-      assert(kmv.getStruct(0).getLong(0) == 3L)
-      assert(kmv.getStruct(0).getLong(2) == 3L)
-    }
+    // a newSession() registry holds built-ins plus injected functions
+    // only: nothing has called GraftFunctions.register on it
+    val ext = spark.newSession()
+    import ext.implicits._
+    val r = Seq((Array(1f, 2f), Array(3f, 4f))).toDF("a", "b")
+      .selectExpr("cosine_sim(a, b)", "dot_product(a, b)",
+        "simhash64(array('x', 'y'))")
+      .head()
+    assert(r.getDouble(1) == 11.0)
+    assert(r.getDouble(0) > 0.98)
+    // the full SQL surface: every GraftFunctions.register builder is
+    // also injected, so a spark.sql.extensions deployment never calls
+    // the per-session registry
+    val r2 = Seq((Array(1.0, 2.0), Array(3.0, 4.0), "a b c"))
+      .toDF("da", "db", "txt")
+      .selectExpr("cosine_sim_d(da, db)",
+        "size(word_shingles(split(txt, ' '), 2))",
+        "bounded_edit_distance('kitten', 'sitting', 3)")
+      .head()
+    assert(r2.getDouble(0) > 0.98)
+    assert(r2.getInt(1) == 2)
+    assert(r2.getInt(2) == 3)
+    val gen = Seq(Tuple1("a b c d")).toDF("txt")
+      .selectExpr("ngram_explode(split(txt, ' '), 2) AS g")
+    assert(gen.count() == 3)
+    val kmv = Seq(1L, 2L, 3L).toDF("v")
+      .selectExpr("kmv_sketch(v, 64) AS s").head()
+    // n < k branch: KMV retains all 3 distinct hashes, estimate exact
+    assert(kmv.getStruct(0).getLong(0) == 3L)
+    assert(kmv.getStruct(0).getLong(2) == 3L)
   }
 
   test("every SQL function-table entry resolves in an extension session") {
     val entries =
       functions.GraftFunctions.table ++ ops.NewsPipeline.kernelFunctions
-    withExtensionSession { ext =>
+    // the shared session, and a newSession() of it whose registry no
+    // register call has touched
+    for (ext <- Seq(spark, spark.newSession())) {
       val registry = ext.sessionState.functionRegistry
       entries.foreach { case (id, info, builder) =>
         assert(registry.lookupFunction(id).map(_.getClassName) ==
@@ -48,39 +59,36 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("RewriteDotProducts: built-in aggregate/zip_with idiom becomes DotProduct") {
-    withExtensionSession { ext =>
-      // parquet-backed source: a literal LocalRelation would be
-      // constant-folded wholesale, hiding whether the rule fired
-      val df = model.Tables.embeddings(ext, sf).limit(50)
-        .selectExpr("vec_id",
-          """aggregate(zip_with(embedding, embedding,
-            |  (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)),
-            |CAST(0 AS DOUBLE), (acc, v) -> acc + v) AS dot""".stripMargin)
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("dot_product"), optimized)
-      // value parity with the un-rewritten session (shared spark has no
-      // extensions, so it evaluates the HOF chain)
-      val viaRule = df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val viaHof = model.Tables.embeddings(spark, sf).limit(50)
-        .selectExpr("vec_id",
-          """aggregate(zip_with(embedding, embedding,
-            |  (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)),
-            |CAST(0 AS DOUBLE), (acc, v) -> acc + v) AS dot""".stripMargin)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(viaRule == viaHof)
+    // parquet-backed source: a literal LocalRelation would be
+    // constant-folded wholesale, hiding whether the rule fired
+    def dots = model.Tables.embeddings(spark, sf).limit(50)
+      .selectExpr("vec_id",
+        """aggregate(zip_with(embedding, embedding,
+          |  (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)),
+          |CAST(0 AS DOUBLE), (acc, v) -> acc + v) AS dot""".stripMargin)
+    def plannedAndRows = {
+      val df = dots
+      (df.queryExecution.optimizedPlan.toString,
+        df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     }
+    val (optimized, viaRule) = plannedAndRows
+    assert(optimized.contains("dot_product"), optimized)
+    // value parity with the rule excluded, which evaluates the HOF chain
+    val (hofPlan, viaHof) = withExcludedRules(RewriteDotProducts)(plannedAndRows)
+    assert(!hofPlan.contains("dot_product"), hofPlan)
+    assert(viaRule == viaHof)
   }
 
   test("catalog-wide: session-wide extensions change no plan outside the intended rewrites") {
-    // The r07 verdict asked for this directly: q46/p09 prove the native
-    // operator fires where intended; this proves the Rule/Strategy do
-    // NOT mis-fire on everything else. Every catalog query is optimized
-    // twice — shared extension-less session vs GraftExtensions installed
-    // session-wide — and the optimized logical plans must agree after
-    // normalising session-varying noise (expr ids, temp paths). A diff
-    // is only legal when the extension session's plan carries one of the
-    // injected rewrites (dot_product / TopKPerKey) that the baseline
-    // lacks — i.e. the rule fired on a genuinely-matching idiom.
+    // q46/p09 prove the native operator fires where intended; this
+    // proves the Rule/Strategy do NOT mis-fire on everything else. Every
+    // catalog query is optimized twice on the shared session — once
+    // with both injected rewrites excluded, once as configured — and the
+    // optimized logical plans must agree after normalising run-varying
+    // noise (expr ids, temp paths). A diff is only legal when the
+    // configured plan carries one of the injected rewrites (dot_product
+    // / TopKPerKey) that the baseline lacks — i.e. the rule fired on a
+    // genuinely-matching idiom.
     def normalise(p: String): String = p
       .replaceAll("#\\d+L?", "#?")              // per-session expr ids
       // lambda variable names carry a global counter (x_3 vs x_6)
@@ -89,54 +97,68 @@ class ExtensionsSpec extends SparkSpec {
       .replaceAll("/tmp/[^\\s,\\)\\]]+", "/tmp/?")
       .replaceAll("@[0-9a-f]{6,}", "@?")        // object identity hashes
     val failures = scala.collection.mutable.ListBuffer[String]()
-    withExtensionSession { ext =>
-      for (q <- SparkEntry.catalog) {
-        try {
-          val base = normalise(
-            q.run(spark, sf).queryExecution.optimizedPlan.toString)
-          val under = normalise(
-            q.run(ext, sf).queryExecution.optimizedPlan.toString)
-          if (base != under) {
-            // legal diffs: (a) an injected rewrite fired — TopKPerKey
-            // anywhere (the rule only matches the dropped-rank idiom,
-            // guard-pinned by TopKSpec; q46/p09 carry it in BOTH plans
-            // with seam-dependent Project placement) or dot_product
-            // introduced; (b) RewriteDistinctAggregates permutes its gid
-            // group numbering with session exprId order (q10's 3-distinct
-            // agg) — a Spark-internal ordering artifact, so exempt only
-            // when EVERY differing line is gid-bearing in both plans
-            val diffPairs = base.linesIterator.toSeq
-              .zipAll(under.linesIterator.toSeq, "", "")
-              .filter(x => x._1 != x._2)
-            val intended =
-              under.contains("TopKPerKey") ||
-                (under.contains("dot_product") && !base.contains("dot_product")) ||
-                (diffPairs.nonEmpty && diffPairs.forall { case (b, u) =>
-                  b.contains("gid#?") && u.contains("gid#?") })
-            if (!intended)
-              failures += s"${q.name}: unexpected plan diff under extensions:\n" +
-                diffPairs.take(4).map { case (b, u) => s"  BASE: $b\n  EXT : $u" }
-                  .mkString("\n")
-          }
-        } catch {
-          case e: Throwable =>
-            failures += s"${q.name}: failed to plan under extensions: ${e.getMessage}"
+    for (q <- SparkEntry.catalog) {
+      try {
+        val base = withExcludedRules(RewriteDotProducts, RewriteTopKPerKey)(
+          normalise(q.run(spark, sf).queryExecution.optimizedPlan.toString))
+        val under = normalise(
+          q.run(spark, sf).queryExecution.optimizedPlan.toString)
+        if (base != under) {
+          // legal diffs: (a) an injected rewrite fired — TopKPerKey
+          // anywhere (the rule only matches the dropped-rank idiom,
+          // guard-pinned by TopKSpec) or dot_product introduced; (b)
+          // RewriteDistinctAggregates permutes its gid group numbering
+          // with exprId order (q10's 3-distinct agg) — a Spark-internal
+          // ordering artifact, so exempt only when EVERY differing line
+          // is gid-bearing in both plans
+          val diffPairs = base.linesIterator.toSeq
+            .zipAll(under.linesIterator.toSeq, "", "")
+            .filter(x => x._1 != x._2)
+          val intended =
+            under.contains("TopKPerKey") ||
+              (under.contains("dot_product") && !base.contains("dot_product")) ||
+              (diffPairs.nonEmpty && diffPairs.forall { case (b, u) =>
+                b.contains("gid#?") && u.contains("gid#?") })
+          if (!intended)
+            failures += s"${q.name}: unexpected plan diff under extensions:\n" +
+              diffPairs.take(4).map { case (b, u) => s"  BASE: $b\n  EXT : $u" }
+                .mkString("\n")
         }
+      } catch {
+        case e: Throwable =>
+          failures += s"${q.name}: failed to plan under extensions: ${e.getMessage}"
       }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("rule leaves non-matching folds alone") {
-    withExtensionSession { ext =>
-      import ext.implicits._
-      val df = Seq((Array(1f, 2f), Array(3f, 4f))).toDF("a", "b")
-        .selectExpr(
-          // subtle difference: merge multiplies instead of adding
-          """aggregate(zip_with(a, b, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)),
-            |CAST(1 AS DOUBLE), (acc, v) -> acc * v) AS notdot""".stripMargin)
-      assert(!df.queryExecution.optimizedPlan.toString.contains("dot_product"))
-      assert(df.head().getDouble(0) == 3.0 * 8.0)
-    }
+    import spark.implicits._
+    val df = Seq((Array(1f, 2f), Array(3f, 4f))).toDF("a", "b")
+      .selectExpr(
+        // subtle difference: merge multiplies instead of adding
+        """aggregate(zip_with(a, b, (p, q) -> CAST(p AS DOUBLE) * CAST(q AS DOUBLE)),
+          |CAST(1 AS DOUBLE), (acc, v) -> acc * v) AS notdot""".stripMargin)
+    assert(!df.queryExecution.optimizedPlan.toString.contains("dot_product"))
+    assert(df.head().getDouble(0) == 3.0 * 8.0)
+  }
+
+  test("source guard: src/main never assigns experimental.extraOptimizations or extraStrategies") {
+    // GraftSession.configure's spark.sql.extensions is the one activation
+    // path; a per-session experimental swap would plan beside it
+    val assign = raw"experimental\s*\.\s*extra(Optimizations|Strategies)\s*=".r
+    val root = new java.io.File(sys.props("user.dir"), "src/main")
+    assert(root.isDirectory, s"no src/main under ${root.getParent}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val sources = files(root)
+    assert(sources.nonEmpty)
+    val hits = for {
+      f <- sources
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if assign.findFirstIn(line).nonEmpty
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -463,22 +463,18 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q46: session-wide GraftExtensions alone plans the native heap (no experimental seam)") {
-    // q46's catalog body activates the rewrite via the per-query
-    // experimental seam; the production activation is
-    // `spark.sql.extensions=graft.plans.GraftExtensions`. Audit that the
-    // IDENTICAL query body (native=false → no experimental overrides)
-    // plans heap-partial → exchange → heap-final when the extensions are
-    // installed session-wide, and that no Window survives the rewrite.
+    // q46's catalog body is the plain `row_number() <= 3` idiom on the
+    // caller's session; `spark.sql.extensions=graft.plans.GraftExtensions`
+    // (set by GraftSession.configure) is the only activation. Audit that
+    // it plans heap-partial → exchange → heap-final and that no Window
+    // survives the rewrite.
     import org.apache.spark.sql.execution.window.WindowExec
-    withExtensionSession { ext =>
-      val plan = ops.Relational.nativeTopK(ext, sf, native = false)
-        .queryExecution.sparkPlan
-      val heaps = plan.collect { case t: plans.TopKPerKeyExec => t }
-      assert(heaps.map(_.partial) == Seq(false, true),
-        s"expected final+partial heap pair under session-wide extensions:\n$plan")
-      assert(plan.collect { case w: WindowExec => w }.isEmpty,
-        s"window survived the session-wide rewrite:\n$plan")
-    }
+    val plan = ops.Relational.q46.run(spark, sf).queryExecution.sparkPlan
+    val heaps = plan.collect { case t: plans.TopKPerKeyExec => t }
+    assert(heaps.map(_.partial) == Seq(false, true),
+      s"expected final+partial heap pair under session-wide extensions:\n$plan")
+    assert(plan.collect { case w: WindowExec => w }.isEmpty,
+      s"window survived the session-wide rewrite:\n$plan")
   }
 
   test("p09: stratified sample at sf0.1 plans bounded heaps, zero Window") {
@@ -649,7 +645,8 @@ class PlanAuditSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin") ||
       plan.contains("BroadcastExchange"), plan.take(1200))
-    assert(plan.contains("windowspecdefinition(query_id"), plan.take(2000))
+    // the per-query top-k is GraftExtensions' heap, keyed on query_id
+    assert(plan.contains("TopKPerKey [query_id"), plan.take(2000))
     assert(!plan.contains("CartesianProduct"), plan.take(1200))
   }
 

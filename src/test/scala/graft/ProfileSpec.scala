@@ -33,4 +33,12 @@ class ProfileSpec extends SparkSpec {
     assert("== Physical Plan ==".r.findAllMatchIn(text).size == names.size,
       text)
   }
+
+  test("windows: two runs on one query print identical lines, no expression ids") {
+    // s01's ranking window sits behind a broadcast join at sf0.001
+    val runs = Seq.fill(2)(profile("windows", sf, "s01_topk_cosine"))
+    assert(runs.head.exists(_.contains("(partitionBy=query_id)")), runs.head)
+    assert(runs.head == runs(1), runs)
+    assert(runs.head.forall(!_.contains("#")), runs.head)
+  }
 }

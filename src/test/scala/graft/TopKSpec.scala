@@ -5,19 +5,22 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.{RewriteTopKPerKey, TopKPerKeyExec, TopKPerKeyStrategy}
+import graft.plans.{RewriteTopKPerKey, TopKPerKeyExec}
 
-/** The native top-k-per-key operator (q46's machinery): rewrite guards,
-  * plan shape, and value parity against Spark's window plan. */
+/** The native top-k-per-key operator (q46's machinery) on the shared
+  * session, where `GraftExtensions` installs it: rewrite guards, plan
+  * shape, and value parity against Spark's window plan (the same body
+  * with [[RewriteTopKPerKey]] excluded). */
 class TopKSpec extends SparkSpec {
 
-  /** Session with the rewrite+strategy scoped on (q46's activation). */
-  private def nativeSession = {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.experimental.extraOptimizations = Seq(RewriteTopKPerKey)
-    s2.experimental.extraStrategies = Seq(TopKPerKeyStrategy)
-    s2
+  private def heapsOf(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.sparkPlan.collect { case t: TopKPerKeyExec => t }
+
+  /** q46's rows under Spark's window plan; asserts the twin has no heap. */
+  private def windowTwinRows = withExcludedRules(RewriteTopKPerKey) {
+    val window = ops.Relational.q46.run(spark, sf)
+    assert(heapsOf(window).isEmpty)
+    window.collect().toSeq
   }
 
   private def idiom(s: org.apache.spark.sql.SparkSession, k: Int) = {
@@ -31,7 +34,7 @@ class TopKSpec extends SparkSpec {
   }
 
   test("plan: two heap nodes (partial under final), zero Window/Sort") {
-    val df = idiom(nativeSession, 3)
+    val df = idiom(spark, 3)
     // sparkPlan, not executedPlan: the AQE wrapper hides every node
     val plan = df.queryExecution.sparkPlan
     val heaps = plan.collect { case t: TopKPerKeyExec => t }
@@ -43,15 +46,11 @@ class TopKSpec extends SparkSpec {
   }
 
   test("value parity with Spark's window plan, and with the oracle idiom") {
-    val native = ops.Relational.nativeTopK(spark, sf, native = true)
-    val window = ops.Relational.nativeTopK(spark, sf, native = false)
-    // anti-vacuity: the twin really runs Spark's plan
-    assert(window.queryExecution.sparkPlan
-      .collect { case t: TopKPerKeyExec => t }.isEmpty)
-    assert(native.queryExecution.sparkPlan
-      .collect { case t: TopKPerKeyExec => t }.nonEmpty)
+    val native = ops.Relational.q46.run(spark, sf)
+    // anti-vacuity: the heap runs here, Spark's plan in the twin
+    assert(heapsOf(native).nonEmpty)
     val a = native.collect().toSeq
-    val b = window.collect().toSeq
+    val b = windowTwinRows
     assert(a == b, s"native=${a.take(5)} window=${b.take(5)}")
     assert(a.nonEmpty)
     // every key retains at most 3 rows, and keys with >= 3 orders exactly 3
@@ -61,10 +60,9 @@ class TopKSpec extends SparkSpec {
   }
 
   test("rn = 1 (latest-per-key) and rn < k forms rewrite; k bound honored") {
-    val s = nativeSession
+    val s = spark
     val one = idiom(s, 1) // rn <= 1
-    assert(one.queryExecution.sparkPlan
-      .collect { case t: TopKPerKeyExec => t }.map(_.k) == Seq(1, 1))
+    assert(heapsOf(one).map(_.k) == Seq(1, 1))
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     val lt = model.Tables.orders(s, sf)
@@ -72,15 +70,13 @@ class TopKSpec extends SparkSpec {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") < 4)
       .drop("rn")
-    assert(lt.queryExecution.sparkPlan
-      .collect { case t: TopKPerKeyExec => t }.map(_.k) == Seq(3, 3))
+    assert(heapsOf(lt).map(_.k) == Seq(3, 3))
     val eq = model.Tables.orders(s, sf)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
-    assert(eq.queryExecution.sparkPlan
-      .collect { case t: TopKPerKeyExec => t }.map(_.k) == Seq(1, 1))
+    assert(heapsOf(eq).map(_.k) == Seq(1, 1))
     // rn = 1 result == groupBy max under the same total order
     val got = eq.orderBy("o_custkey").collect().map(r => (r.get(0), r.get(1)))
     val want = model.Tables.orders(s, sf)
@@ -97,11 +93,9 @@ class TopKSpec extends SparkSpec {
   }
 
   test("guards: rank(), retained rank column, global window stay native-free") {
-    val s = nativeSession
+    val s = spark
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    def heapsOf(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.sparkPlan.collect { case t: TopKPerKeyExec => t }
     // rank() admits > k rows under ties: not heap-expressible
     val viaRank = model.Tables.orders(s, sf)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
@@ -120,15 +114,14 @@ class TopKSpec extends SparkSpec {
       .filter(col("rn") <= 3).drop("rn")
     assert(heapsOf(global).isEmpty)
     // and every guarded form still answers correctly (values unchanged)
-    assert(kept.drop("rn").collect().toSet ==
-      ops.Relational.nativeTopK(spark, sf, native = false).collect().toSet)
+    assert(kept.drop("rn").collect().toSet == windowTwinRows.toSet)
   }
 
-  test("withExtensions activation path plans the heap operator too") {
-    withExtensionSession { ext =>
-      val heaps = idiom(ext, 3).queryExecution.sparkPlan
-        .collect { case t: TopKPerKeyExec => t }
-      assert(heaps.map(_.partial) == Seq(false, true))
-    }
+  test("spark.sql.extensions path: configured session and newSession() plan q46 heaps") {
+    assert(spark.sparkContext.getConf.get("spark.sql.extensions") ==
+      classOf[graft.plans.GraftExtensions].getName)
+    for (s <- Seq(spark, spark.newSession()))
+      assert(heapsOf(ops.Relational.q46.run(s, sf)).map(_.partial) ==
+        Seq(false, true))
   }
 }

@@ -199,9 +199,12 @@ class TypedAndMLSpec extends SparkSpec {
     import graft.ops.MLClassify
     val got = MLClassify.ml19.run(spark, sf)
     val plan = got.queryExecution.executedPlan.toString
-    // the rank<=k filter must reach the map side (WindowGroupLimit),
-    // and the probe side must ride a broadcast, never a shuffled cartesian
-    assert(plan.contains("WindowGroupLimit"), plan.take(800))
+    // the rank<=k filter must reach the map side (GraftExtensions'
+    // partial top-k heap below the exchange), and the probe side must
+    // ride a broadcast, never a shuffled cartesian
+    assert(got.queryExecution.sparkPlan.collect {
+      case t: graft.plans.TopKPerKeyExec if t.partial => t.k
+    }.contains(MLClassify.KnnK), plan.take(800))
     assert(plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"), plan.take(800))
     val rows = got.collect()
