@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.FreePersisted
+
 /** Driver-run benchmark: one JSON line with per-query seconds at the
   * SPARK_GRAFT_SF_DIR scale factor.
   *
@@ -374,7 +376,7 @@ object Bench {
       val q = byName(n)
       val rs = timeReps(s"control-$tag:$n",
         () => q.run(spark, sfDir).write.format("noop").mode("overwrite").save())
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      FreePersisted(spark.sparkContext)
       n -> rs.headOption.getOrElse(-1.0)
     }
     val ctlPre = runControls("pre")
@@ -390,7 +392,7 @@ object Bench {
       // isolated vs 14.4 s at position ~180 of the full catalog before
       // this cleanup existed. A deployment runs queries in separate
       // sessions and never pays that accumulation.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      FreePersisted(spark.sparkContext)
       rs
     }
     val ctlPost = runControls("post")

@@ -2,7 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.graft.BusDrain
+import org.apache.spark.graft.{BusDrain, FreePersisted}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
@@ -28,6 +28,7 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   *    executing it. `exec` runs the query first and prints the final
   *    adaptive plan: some width collapses exist only in AQE's runtime
   *    re-plan. With `outDir`, each plan goes to `outDir/<name>.txt`.
+  *    Plans print through [[stable]], so two runs or two commits diff.
   *  - `windows`: lists the queries whose initial physical plan has a
   *    window at a width no shuffle set — a global window (one task
   *    whatever the input size) or a window whose input reaches a scan
@@ -104,10 +105,21 @@ object Profile {
         } catch { case NonFatal(e) =>
           println(s"""{"q":"${q.name}","error":"${e.getClass.getSimpleName}"}""")
         }
-        sc.getPersistentRDDs.values.foreach(_.unpersist(false))
+        FreePersisted(sc)
       }
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `text` without what differs between two runs of one plan or its
+    * twin at another commit: expression and plan ids (JVM-wide
+    * counters), RDD ids, the source line of an RDD's call site and
+    * lambda class names. */
+  private[graft] def stable(text: String): String = text
+    .replaceAll("#\\d+L?", "")
+    .replaceAll("plan_id=\\d+", "plan_id=")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[]")
+    .replaceAll("(at \\w+\\.scala):\\d+", "$1")
+    .replaceAll("\\$\\$Lambda[$/\\w@]*", "\\$\\$Lambda")
 
   private def plans(spark: SparkSession, sfDir: String, qs: Seq[Q],
       outDir: Option[String], execute: Boolean): Unit = {
@@ -115,7 +127,7 @@ object Profile {
     qs.foreach { q =>
       val df = q.run(spark, sfDir)
       if (execute) df.queryExecution.executedPlan.execute().count(): Unit
-      val text = df.queryExecution.explainString(FormattedMode)
+      val text = stable(df.queryExecution.explainString(FormattedMode))
       outDir match {
         case Some(d) =>
           java.nio.file.Files.writeString(
@@ -154,10 +166,7 @@ object Profile {
         case other =>
           other.children.view.flatMap(pinned(_, passed)).headOption
       }
-    // expression ids come from a JVM-wide counter: strip them so two
-    // sweeps print the same lines
-    def keys(spec: Seq[_]): String =
-      spec.mkString(",").replaceAll("#\\d+L?", "").take(40)
+    def keys(spec: Seq[_]): String = stable(spec.mkString(",")).take(40)
     for (q <- qs) {
       try {
         val plan = initial(q.run(spark, sfDir).queryExecution.executedPlan)

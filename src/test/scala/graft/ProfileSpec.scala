@@ -2,7 +2,7 @@ package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-/** [[Profile]]'s `stages` and `plan` modes, run on the shared session
+/** [[Profile]]'s modes, run on the shared session
   * through [[Profile.run]] (which must leave the session running). */
 class ProfileSpec extends SparkSpec {
   private val names = Seq("q01_pricing_summary", "n05_digest")
@@ -32,6 +32,15 @@ class ProfileSpec extends SparkSpec {
     val text = profile("plan", sf, names.mkString(",")).mkString("\n")
     assert("== Physical Plan ==".r.findAllMatchIn(text).size == names.size,
       text)
+  }
+
+  test("exec: two runs of d11 print identical text, run- and commit-specific ids stripped") {
+    val runs = Seq.fill(2)(profile("exec", sf, "d11_dedup_cascade").mkString("\n"))
+    assert(runs.head.contains("RDD[] at localCheckpoint at Dedup.scala,"), runs.head)
+    assert(runs.head == runs(1))
+    assert("#\\d|plan_id=\\d|RDD\\[\\d|\\.scala:\\d".r.findFirstIn(runs.head).isEmpty, runs.head)
+    assert(Profile.stable("MapElements f$$Lambda$7969/0x0000000801b2c4f0@5f3e2a1b, obj#3") ==
+      "MapElements f$$Lambda, obj")
   }
 
   test("windows: two runs on one query print identical lines, no expression ids") {
