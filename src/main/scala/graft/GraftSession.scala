@@ -46,6 +46,14 @@ object GraftSession {
     dir
   }
 
+  /** Hex of a corpus dir's 96-bit md5 prefix: the name of every
+    * per-corpus artifact. Not hashCode — a 32-bit collision between two
+    * corpus dirs would silently serve one dir's artifact for the other. */
+  def corpusKey(d: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(d.getBytes("UTF-8")).take(12)
+      .map(b => f"${b & 0xff}%02x").mkString
+
   // ~tens of MB per JVM once q44 has written its bucketed tables
   private val warehouseDir = scratchDir("warehouse")
 
@@ -81,9 +89,9 @@ object GraftSession {
   /** Cores of the [[bench]] session: `SPARK_GRAFT_CPUS`, default 4. */
   def benchCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  /** `SPARK_GRAFT_CONF="k=v;k=v"`: extra session confs for measurement
-    * toggles, applied last by [[bench]] so a toggle can override the
-    * bench defaults. */
+  /** `SPARK_GRAFT_CONF="k=v;k=v"`: extra session confs (Spark's own
+    * keys, e.g. `spark.sql.optimizer.excludedRules`), applied last by
+    * [[bench]] so they override the bench defaults. */
   def confOverrides: Seq[(String, String)] =
     sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';').toSeq
       .flatMap { kv =>
@@ -97,12 +105,7 @@ object GraftSession {
     * under: `local[`[[benchCpus]]`]` at the same shuffle width, fasthash,
     * the validation caps, then [[confOverrides]]. */
   def bench(): SparkSession = {
-    val cpus = benchCpus
-    val spark = configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = local(benchCpus.toInt)
     spark.conf.set("spark.graft.fasthash", "true")
     spark.conf.set("spark.graft.validation.cap.docs", "5000")
     spark.conf.set("spark.graft.validation.cap.vecs", "2000")

@@ -47,7 +47,7 @@ object Profile {
     require(args.length >= 2,
       "usage: Profile stages|plan|exec|windows <sfDir> [names|all] [outDir]")
     val sfDir = args(1)
-    val qs = queries(args.lift(2).getOrElse("all"))
+    val qs = SparkEntry.queriesNamed(args.lift(2).getOrElse("all"))
     args.head match {
       case "stages" => stages(spark, sfDir, qs)
       case "plan" => plans(spark, sfDir, qs, args.lift(3), execute = false)
@@ -56,14 +56,6 @@ object Profile {
       case other => sys.error(s"unknown Profile mode $other")
     }
   }
-
-  private def queries(names: String): Seq[Q] =
-    if (names == "all") SparkEntry.catalog
-    else {
-      val byName = SparkEntry.catalog.map(q => q.name -> q).toMap
-      names.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map(n =>
-        byName.getOrElse(n, sys.error(s"no catalog query named $n")))
-    }
 
   private def stages(spark: SparkSession, sfDir: String, qs: Seq[Q]): Unit = {
     val sc = spark.sparkContext

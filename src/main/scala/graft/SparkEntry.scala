@@ -28,6 +28,20 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     catalog.map(q => q.name -> q.run).toMap
 
+  /** The catalog queries in `names` (comma-separated), in that order,
+    * or the whole catalog for `all`. Throws on a name not in the
+    * catalog, naming it, rather than running a shorter list. */
+  def queriesNamed(names: String): Seq[Q] =
+    if (names == "all") catalog
+    else {
+      val byName = catalog.map(q => q.name -> q).toMap
+      val picked = names.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val unknown = picked.filterNot(byName.contains)
+      require(unknown.isEmpty,
+        s"no catalog query named ${unknown.mkString(", ")}")
+      picked.map(byName)
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

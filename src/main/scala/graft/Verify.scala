@@ -6,23 +6,26 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = GraftSession.local(GraftSession.benchCpus.toInt)
     // dev-only: restrict the dump (and the oracle json) to named queries
-    // for fast iteration — the driver never sets this (Bench convention)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    def picked(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => picked(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    // for fast iteration; the full correctness run leaves it unset
+    try run(spark, sfDir, outDir,
+      sys.env.getOrElse("SPARK_GRAFT_VERIFY_ONLY", "all"))
+    finally spark.stop()
+  }
+
+  /** [[main]] on a caller's session, over the queries that
+    * [[SparkEntry.queriesNamed]] picks: an unknown name fails before any
+    * query runs. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      names: String): Unit = {
+    val qs = SparkEntry.queriesNamed(names)
+    new java.io.File(outDir).mkdirs()
+    qs.foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -37,9 +40,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => picked(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = qs.flatMap(x => x.oracle.map(sql => s"${q(x.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -193,14 +193,4 @@ object GraftFunctions {
       case other => throw new IllegalArgumentException(
         s"simhash64 mode must be 'md5' or 'fnv', got: $other")
     }
-
-  def cosineSim(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.expr(s"cosine_sim($a, $b)")
-  }
-
-  def simhash64(spark: SparkSession, tokens: String): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.expr(s"simhash64($tokens)")
-  }
 }

@@ -1368,11 +1368,23 @@ object CleanCorpus {
        |  CAST(checksum AS BIGINT) AS checksum
        |FROM card CROSS JOIN tot
        |ORDER BY source""".stripMargin) { (s, d) =>
+    curatedRelease(s, d, _.localCheckpoint())
+  }
+
+  /** [[p20]]'s body. `pinCard` materializes the sources-sized card
+    * aggregate that the token total and the card both read. p20
+    * checkpoints it: unpinned, the two reads share no exchange and the
+    * aggregate runs twice (72 jobs against 69 at sf0.01). `PlanAuditSpec`
+    * passes `identity` so that the shipped card's plan shows the scans
+    * it is computed from (over the checkpoint the plan reads
+    * ExistingRDD, and a scan audit is vacuous). */
+  private[graft] def curatedRelease(s: SparkSession, d: String,
+      pinCard: DataFrame => DataFrame): DataFrame = {
     val run = java.util.UUID.randomUUID().toString.take(8)
     val base = s"$releaseScratch/$run"
     val staging = s"$base/staging/release"
     val published = s"$base/published/release"
-    def cardOf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    def cardOf(df: DataFrame): DataFrame = {
       // checksum accumulates in DECIMAL(38,0), reduced mod 2^32 (r11
       // ADVICE): each term is a 32-bit md5 prefix (≤ 0xFFFFFFFF), so a
       // LONG sum wraps silently in Spark past ~2e9 docs/source while
@@ -1382,7 +1394,7 @@ object CleanCorpus {
       // the g16-style in-op guard below turns the far-side overflow
       // (Spark yields NULL under non-ANSI) into a loud failure instead
       // of a silently-null manifest line.
-      val card0 = df.groupBy("source")
+      val card = pinCard(df.groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
           countDistinct(col("shard"), col("bin")).as("n_bins"),
           (sum(conv(substring(md5(concat(
@@ -1391,15 +1403,7 @@ object CleanCorpus {
             col("bin").cast("string"), lit("|"),
             col("n_tokens").cast("string"))), 1, 8), 16, 10)
             .cast("decimal(38,0)")) % lit(4294967296L))
-            .cast("long").as("checksum"))
-      // checkpoint is config-gated so PlanAuditSpec can audit the card's
-      // REAL scan provenance (the checkpointed plan reads ExistingRDD —
-      // a scan audit over it is vacuous, r11 ADVICE); default on: the
-      // sources-sized card is read by the total AND the card
-      val card =
-        if (s.conf.get("spark.graft.p20.checkpoint", "true").toBoolean)
-          card0.localCheckpoint()
-        else card0
+            .cast("long").as("checksum")))
       // r16: the overflow guard is an in-plan raise_error on the
       // checksum projection — same loud failure, zero extra jobs (the
       // former where(isNull).count() was one driver action per card)
@@ -1415,7 +1419,7 @@ object CleanCorpus {
           "CAST(checksum AS BIGINT) AS checksum")
         .orderBy("source")
     }
-    def cardLines(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    def cardLines(df: DataFrame): Seq[String] =
       cardOf(df).collect().toSeq.map(r =>
         (0 until 6).map(r.get(_).toString).mkString("|"))
     // r16: one action per audit — the rule-book agg and the orphan

@@ -62,25 +62,6 @@ object EntityResolution {
         s"$NameDelSql AS name_b", s"$AcctSql AS acct_b",
         "c_nationkey AS nat_b", "c_mktsegment AS seg_b")
 
-  /** ALL scored candidate pairs (b_id, a_custkey, score) off the
-    * validation blocking — er04 reads the full score distribution;
-    * [[links]] is the ≥ 28 auto-link slice.
-    *
-    * The join INPUTS are explicitly widened ([[maybeWiden]], the №20
-    * v2 rule): without exchanges, the blocked join broadcasts one side
-    * and inherits the other's single compact-file split — ~10⁸ banded
-    * edit distances (r13 finding) AND, with the r13 post-join exchange,
-    * the single-task shuffle write of every joined row (r14 finding) —
-    * so the width is fixed BEFORE the join and nothing pair-sized ever
-    * crosses a shuffle. */
-  /** Measurement toggle for the №20 before/after: `false` restores the
-    * pre-fix single-task shape (no input exchanges) so the 16× cost of
-    * the bug is measurable on demand instead of taken on faith.
-    * Production default is true; nothing in the repo sets it false
-    * except the SCALE.md №20 runs. */
-  private[graft] def widen(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.er.widen").forall(_.toBoolean)
-
   /** Widen a join INPUT to shuffle-partition width (№20 v2 rule): the
     * r13 fix placed the exchange AFTER the blocked join, which widened
     * the comparator but left the join stage itself — and the shuffle
@@ -102,16 +83,25 @@ object EntityResolution {
     * higher-cardinality block key (linksProd's (nation, segment,
     * cents) is already near-singleton), not a wider exchange on a
     * 125-value key. */
-  private def maybeWiden(s: SparkSession, df: DataFrame,
+  private def widen(s: SparkSession, df: DataFrame,
       key: String): DataFrame =
-    if (widen(s)) {
-      val np = s.conf.get("spark.sql.shuffle.partitions").toInt
-      df.repartition(np, col(key))
-    } else df
+    df.repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
+      col(key))
 
+  /** ALL scored candidate pairs (b_id, a_custkey, score) off the
+    * validation blocking — er04 reads the full score distribution;
+    * [[links]] is the ≥ 28 auto-link slice.
+    *
+    * The join INPUTS are explicitly widened ([[widen]], the №20 v2
+    * rule): without exchanges, the blocked join broadcasts one side
+    * and inherits the other's single compact-file split — ~10⁸ banded
+    * edit distances (r13 finding) AND, with the r13 post-join exchange,
+    * the single-task shuffle write of every joined row (r14 finding) —
+    * so the width is fixed BEFORE the join and nothing pair-sized ever
+    * crosses a shuffle. */
   private[graft] def scoredPairs(s: SparkSession, d: String): DataFrame = {
-    val cust = maybeWiden(s, Tables.customer(s, d), "c_custkey")
-    maybeWiden(s, registry(s, d), "b_id")
+    val cust = widen(s, Tables.customer(s, d), "c_custkey")
+    widen(s, registry(s, d), "b_id")
       .join(cust, col("nat_b") === col("c_nationkey") &&
         col("seg_b") === col("c_mktsegment"))
       .selectExpr("b_id", "c_custkey", "acct_b", "c_acctbal",
@@ -832,9 +822,9 @@ object EntityResolution {
     * sampled join + DP run full-width with no pair-sized shuffle. */
   private[graft] def scoredPairsSampled(
       s: SparkSession, d: String): DataFrame = {
-    maybeWiden(s,
+    widen(s,
       registry(s, d).filter(expr(sideSampleSpark("b_id"))), "b_id")
-      .join(maybeWiden(s, Tables.customer(s, d)
+      .join(widen(s, Tables.customer(s, d)
           .filter(expr(sideSampleSpark("c_custkey"))), "c_custkey"),
         col("nat_b") === col("c_nationkey") &&
           col("seg_b") === col("c_mktsegment"))

@@ -352,21 +352,24 @@ object Graph {
 
   private val projLock = new Object
 
-  /** Materialise the sparsified projection ONCE per corpus dir (md5-
-    * keyed path, filesystem-memoised — per-process scratch, so no
-    * cross-session catalog hazard) and return the artifact path. */
-  private[graft] def ensureProjection(s: SparkSession, d: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(12)
-      .map(b => f"${b & 0xff}%02x").mkString
-    val path = s"$projScratch/$md"
+  /** The artifact `<projScratch>/<corpus key><suffix>` of corpus dir
+    * `d`, written by `write` once per process: the `_SUCCESS` marker of
+    * `write`'s last parquet write at that path is the memo (per-process
+    * scratch, so no cross-session catalog hazard). */
+  private def memoized(d: String, suffix: String)(write: String => Unit)
+      : String = {
+    val path = s"$projScratch/${graft.GraftSession.corpusKey(d)}$suffix"
     val done = new java.io.File(s"$path/_SUCCESS")
     if (!done.exists()) projLock.synchronized {
-      if (!done.exists())
-        projectionEdges(s, d).write.mode("overwrite").parquet(path)
+      if (!done.exists()) write(path)
     }
     path
   }
+
+  /** Materialise the sparsified projection ONCE per corpus dir and
+    * return the artifact path. */
+  private[graft] def ensureProjection(s: SparkSession, d: String): String =
+    memoized(d, "")(projectionEdges(s, d).write.mode("overwrite").parquet(_))
 
   /** The FULL weighted projection `ew (s1 < s2, w ≥ 2)` as a second
     * memoised artifact one level below [[ensureProjection]]'s top-k
@@ -375,29 +378,23 @@ object Graph {
     * un-sparsified edges, so it can't reuse the top-k artifact) —
     * materialised once, read per query (the g05 amortisation, extended
     * down one derivation level). */
-  private[graft] def ensureWeightedEdges(s: SparkSession, d: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(12)
-      .map(b => f"${b & 0xff}%02x").mkString
-    val path = s"$projScratch/$md-ew"
-    val done = new java.io.File(s"$path/_SUCCESS")
-    if (!done.exists()) projLock.synchronized {
-      if (!done.exists()) {
-        val ps = Tables.lineitem(s, d)
-          .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
-          .distinct()
-        val pdeg = ps.groupBy("pk").agg(count(lit(1)).as("d"))
-        val kept = ps.join(pdeg.filter(col("d") <= ProjDegCap), "pk")
-          .select("pk", "sk")
-        kept.select(col("pk"), col("sk").as("s1"))
-          .join(kept.select(col("pk"), col("sk").as("s2")), Seq("pk"))
-          .filter(col("s1") < col("s2"))
-          .groupBy("s1", "s2").agg(count(lit(1)).as("w"))
-          .filter(col("w") >= 2)
-          .write.mode("overwrite").parquet(path)
-      }
-    }
-    path
+  private[graft] def ensureWeightedEdges(s: SparkSession, d: String): String =
+    memoized(d, "-ew")(weightedEdges(s, d).write.mode("overwrite").parquet(_))
+
+  /** The weighted supplier pairs `ew (s1 < s2, w ≥ 2)`: suppliers
+    * co-supplying w parts, over parts of degree ≤ [[ProjDegCap]]. */
+  private def weightedEdges(s: SparkSession, d: String): DataFrame = {
+    val ps = Tables.lineitem(s, d)
+      .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
+      .distinct() // №27 non-case: spread regressed g01/g02 (r16 measured)
+    val pdeg = ps.groupBy("pk").agg(count(lit(1)).as("d"))
+    val kept = ps.join(pdeg.filter(col("d") <= ProjDegCap), "pk")
+      .select("pk", "sk")
+    kept.select(col("pk"), col("sk").as("s1"))
+      .join(kept.select(col("pk"), col("sk").as("s2")), Seq("pk"))
+      .filter(col("s1") < col("s2"))
+      .groupBy("s1", "s2").agg(count(lit(1)).as("w"))
+      .filter(col("w") >= 2)
   }
 
   /** The amortised graph pipeline (SCALE.md's g02/g03/g04 note made
@@ -421,17 +418,7 @@ object Graph {
     * key-partitioned window, and the mutuality self-join. */
   private[graft] def projectionEdges(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ps = Tables.lineitem(s, d)
-      .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
-      .distinct() // №27 non-case: spread regressed g01/g02 (r16 measured)
-    val pdeg = ps.groupBy("pk").agg(count(lit(1)).as("d"))
-    val kept = ps.join(pdeg.filter(col("d") <= ProjDegCap), "pk")
-      .select("pk", "sk")
-    val ew = kept.select(col("pk"), col("sk").as("s1"))
-      .join(kept.select(col("pk"), col("sk").as("s2")), Seq("pk"))
-      .filter(col("s1") < col("s2"))
-      .groupBy("s1", "s2").agg(count(lit(1)).as("w"))
-      .filter(col("w") >= 2)
+    val ew = weightedEdges(s, d)
     val dir = ew.select(col("s1").as("v"), col("s2").as("nb"), col("w"))
       .union(ew.select(col("s2").as("v"), col("s1").as("nb"), col("w")))
     val topk = dir
@@ -972,61 +959,55 @@ object Graph {
     * on packed integer ids; names = (nid, node). */
   private[graft] def ensureAnfStates(s: SparkSession, d: String)
       : (String, String) = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(12)
-      .map(b => f"${b & 0xff}%02x").mkString
-    val stPath = s"$projScratch/$md-anf-states"
-    val nmPath = s"$projScratch/$md-anf-names"
-    val done = new java.io.File(s"$stPath/_SUCCESS")
-    if (!done.exists()) projLock.synchronized {
-      if (!done.exists()) {
-        val pr0 = Tables.lineitem(s, d)
-          .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
-          .distinct()
-        // r9 perf: every shuffle (edge join, (node, reg) max-merge agg)
-        // keys on packed integer ids (parts even, suppliers odd); the
-        // name — still the source of the md5 register derivation and
-        // the output contract — lives in its own artifact and is joined
-        // back once, on estimate-sized rows. Register values are md5 of
-        // the NAME, so the oracle is untouched.
-        val pid = expr("pk * 2")
-        val sid = expr("sk * 2 + 1")
-        val edges = pr0.select(pid.as("src"), sid.as("dst"))
-          .union(pr0.select(sid.as("src"), pid.as("dst")))
+    val nmPath = s"$projScratch/${graft.GraftSession.corpusKey(d)}-anf-names"
+    // names are written first, so the states' marker covers both
+    val stPath = memoized(d, "-anf-states") { path =>
+      val pr0 = Tables.lineitem(s, d)
+        .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
+        .distinct()
+      // r9 perf: every shuffle (edge join, (node, reg) max-merge agg)
+      // keys on packed integer ids (parts even, suppliers odd); the
+      // name — still the source of the md5 register derivation and
+      // the output contract — lives in its own artifact and is joined
+      // back once, on estimate-sized rows. Register values are md5 of
+      // the NAME, so the oracle is untouched.
+      val pid = expr("pk * 2")
+      val sid = expr("sk * 2 + 1")
+      val edges = pr0.select(pid.as("src"), sid.as("dst"))
+        .union(pr0.select(sid.as("src"), pid.as("dst")))
+        .localCheckpoint()
+      val names = edges.select(col("src").as("nid")).distinct()
+        .select(col("nid"),
+          when(pmod(col("nid"), lit(2)) === 0,
+            concat(lit("p:"), expr("nid DIV 2").cast("string")))
+            .otherwise(concat(lit("s:"), expr("nid DIV 2").cast("string")))
+            .as("node"))
+        .localCheckpoint()
+      names.write.mode("overwrite").parquet(nmPath)
+      val h = md5(col("node"))
+      val t = ltrim(substring(h, 2, 13), "0")
+      val d1 = substring(t, 1, 1)
+      val extra = when(d1 === "1", 3)
+        .when(d1.isin("2", "3"), 2)
+        .when(d1.isin("4", "5", "6", "7"), 1)
+        .otherwise(0)
+      var st = names
+        .select(col("nid"),
+          conv(substring(h, 1, 1), 16, 10).cast("int").as("reg"),
+          when(length(t) === 0, lit(53))
+            .otherwise((lit(13) - length(t)) * 4 + extra + 1)
+            .cast("int").as("rho"))
+        .localCheckpoint()
+      var all = st.withColumn("r", lit(0))
+      for (r <- 1 to 2) {
+        st = st
+          .union(edges.join(st.withColumnRenamed("nid", "src"), "src")
+            .select(col("dst").as("nid"), col("reg"), col("rho")))
+          .groupBy("nid", "reg").agg(max("rho").cast("int").as("rho"))
           .localCheckpoint()
-        val names = edges.select(col("src").as("nid")).distinct()
-          .select(col("nid"),
-            when(pmod(col("nid"), lit(2)) === 0,
-              concat(lit("p:"), expr("nid DIV 2").cast("string")))
-              .otherwise(concat(lit("s:"), expr("nid DIV 2").cast("string")))
-              .as("node"))
-          .localCheckpoint()
-        names.write.mode("overwrite").parquet(nmPath)
-        val h = md5(col("node"))
-        val t = ltrim(substring(h, 2, 13), "0")
-        val d1 = substring(t, 1, 1)
-        val extra = when(d1 === "1", 3)
-          .when(d1.isin("2", "3"), 2)
-          .when(d1.isin("4", "5", "6", "7"), 1)
-          .otherwise(0)
-        var st = names
-          .select(col("nid"),
-            conv(substring(h, 1, 1), 16, 10).cast("int").as("reg"),
-            when(length(t) === 0, lit(53))
-              .otherwise((lit(13) - length(t)) * 4 + extra + 1)
-              .cast("int").as("rho"))
-          .localCheckpoint()
-        var all = st.withColumn("r", lit(0))
-        for (r <- 1 to 2) {
-          st = st
-            .union(edges.join(st.withColumnRenamed("nid", "src"), "src")
-              .select(col("dst").as("nid"), col("reg"), col("rho")))
-            .groupBy("nid", "reg").agg(max("rho").cast("int").as("rho"))
-            .localCheckpoint()
-          all = all.union(st.withColumn("r", lit(r)))
-        }
-        all.write.mode("overwrite").parquet(stPath)
+        all = all.union(st.withColumn("r", lit(r)))
       }
+      all.write.mode("overwrite").parquet(path)
     }
     (stPath, nmPath)
   }

@@ -1679,12 +1679,7 @@ object Relational {
   private val bucketedLock = new Object
 
   private[graft] def ensureBucketed(s: SparkSession, d: String): String = {
-    // 96-bit md5 prefix, not hashCode: a 32-bit collision between two
-    // corpus dirs would silently serve one dir's table for the other
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(12)
-      .map(b => f"${b & 0xff}%02x").mkString
-    val p = "graft_bk_" + md
+    val p = "graft_bk_" + graft.GraftSession.corpusKey(d)
     // the readiness check is the SESSION catalog, not a JVM-level memo
     // (r06 ADVICE): tables live in a specific SparkSession's in-memory
     // catalog, so a stop()+rebuild in the same JVM must re-write — a
@@ -3071,10 +3066,7 @@ object Relational {
     * tabulation hashing), bit-identical in both engines. The EXACT
     * join size / F2 ride along as the audit columns (per-key count
     * aggregation + key-space-sized join — the d20/q57/q59 discipline:
-    * at 100 TB the exact column is the one you drop — and dropping it
-    * is a CONF, not a rewrite: `spark.graft.ams.audit=false` emits the
-    * sketch-only production form; `AmsSpec` pins that both forms
-    * agree on the estimates).
+    * at 100 TB the exact column is the one you drop).
     *
     * Three frequency regimes: lineitem⋈orders (FK: one side
     * multiplicity 1), lineitem⋈part (≈30× per-key frequency — F2-heavy),
@@ -3230,41 +3222,29 @@ object Relational {
         .cast("long").as("est_join"),
       expr(s"ma div $m").cast("long").as("est_f2_a"),
       expr(s"mb div $m").cast("long").as("est_f2_b"))
-    // r9 verdict #4: the exact audit (per-key count agg + key-space join)
-    // is the column a 100 TB deployment drops — config-gated behind the
-    // spark.graft.* convention (the fasthash precedent) so the
-    // sketch-only production plan is RUNNABLE, not a scaladoc claim.
-    // Default ON: the DuckDB oracle replays the audited form. `AmsSpec`
-    // pins that both forms agree on the estimate columns and that the
-    // production plan contains no audit stage.
-    if (!s.conf.get("spark.graft.ams.audit", "true").toBoolean) {
-      ests.select("pair", "est_join", "est_f2_a", "est_f2_b")
-        .orderBy("pair")
-    } else {
-      // per-key counts already materialised by the pre-agg; grouping by
-      // w0 merges the (vanishingly rare) keys whose w0 words collide —
-      // identical to the former raw-row groupBy(pair, side, w0)
-      val cnts = src.groupBy("pair", "side", "w0")
-        .agg(sum(col("n")).as("n"))
-      val exact = cnts.filter(col("side") === "a")
-        .select(col("pair"), col("w0"), col("n").as("na"))
-        .join(cnts.filter(col("side") === "b")
-          .select(col("pair"), col("w0"), col("n").as("nb")), Seq("pair", "w0"))
-        .groupBy("pair").agg(sum(col("na") * col("nb")).as("ex_join"))
-      val f2 = cnts.groupBy("pair")
-        .agg(sum(when(col("side") === "a", col("n") * col("n"))
-          .otherwise(0L)).as("ex_f2_a"),
-          sum(when(col("side") === "b", col("n") * col("n"))
-            .otherwise(0L)).as("ex_f2_b"))
-      ests
-        .join(exact, Seq("pair"), "left")
-        .join(f2, "pair")
-        .select(col("pair"), col("est_join"),
-          coalesce(col("ex_join"), lit(0L)).cast("long").as("exact_join"),
-          col("est_f2_a"), col("ex_f2_a").cast("long").as("exact_f2_a"),
-          col("est_f2_b"), col("ex_f2_b").cast("long").as("exact_f2_b"))
-        .orderBy("pair")
-    }
+    // per-key counts already materialised by the pre-agg; grouping by
+    // w0 merges the (vanishingly rare) keys whose w0 words collide —
+    // identical to the former raw-row groupBy(pair, side, w0)
+    val cnts = src.groupBy("pair", "side", "w0")
+      .agg(sum(col("n")).as("n"))
+    val exact = cnts.filter(col("side") === "a")
+      .select(col("pair"), col("w0"), col("n").as("na"))
+      .join(cnts.filter(col("side") === "b")
+        .select(col("pair"), col("w0"), col("n").as("nb")), Seq("pair", "w0"))
+      .groupBy("pair").agg(sum(col("na") * col("nb")).as("ex_join"))
+    val f2 = cnts.groupBy("pair")
+      .agg(sum(when(col("side") === "a", col("n") * col("n"))
+        .otherwise(0L)).as("ex_f2_a"),
+        sum(when(col("side") === "b", col("n") * col("n"))
+          .otherwise(0L)).as("ex_f2_b"))
+    ests
+      .join(exact, Seq("pair"), "left")
+      .join(f2, "pair")
+      .select(col("pair"), col("est_join"),
+        coalesce(col("ex_join"), lit(0L)).cast("long").as("exact_join"),
+        col("est_f2_a"), col("ex_f2_a").cast("long").as("exact_f2_a"),
+        col("est_f2_b"), col("ex_f2_b").cast("long").as("exact_f2_b"))
+      .orderBy("pair")
   }
 
   // ---------------------------------------------------------------- q61
@@ -3510,13 +3490,8 @@ object Relational {
     * underestimates (every cell ≥ the key's true count), so est ≥
     * exact is a structural law, not a probabilistic one —
     * `SketchSpec` pins it along with the ε·N error ceiling. The exact
-    * audit column follows the q60 convention: `spark.graft.cms.audit
-    * =false` drops the per-key exact count aggregation AND the src
-    * checkpoint (whose only reuse was that second consumer) — the
-    * 100 TB production form is a single unmaterialized pass — while
-    * the estimate pipeline is unchanged (selection orders by est
-    * alone, so both forms agree on rows; AmsSpec-style parity pinned
-    * in SketchSpec). */
+    * audit column is a per-key count over the same `src`, which is
+    * checkpointed because it has two consumers (sketch and audit). */
   val q63 = Q("q63_cms_heavy_hitters", {
     s"""WITH src AS (
        |  SELECT l_partkey AS k, ${(0 until CmsRows).map(r =>
@@ -3545,18 +3520,13 @@ object Relational {
        |ORDER BY e.est_count DESC, e.k
        |LIMIT 20""".stripMargin
   }) { (s, d) =>
-    val audit = s.conf.get("spark.graft.cms.audit", "true").toBoolean
     // №27: 4 md5 buckets per row ride the single lineitem scan split —
     // spread the one projected key column to session width first.
-    val src0 = Width.spread(Tables.lineitem(s, d).select("l_partkey"))
+    val src = Width.spread(Tables.lineitem(s, d).select("l_partkey"))
       .selectExpr(
         Seq("l_partkey AS k") ++ (0 until CmsRows).map(r =>
           s"${cmsBucketSpark(r, "l_partkey")} AS b$r"): _*)
-    // checkpoint ONLY when the exact audit gives the projection a
-    // second consumer (r10 ADVICE): the sketch-only production form has
-    // one pass over src and must not materialize a fact-table-sized
-    // intermediate to executor storage for no reuse benefit
-    val src = if (audit) src0.localCheckpoint() else src0
+      .localCheckpoint()
     val cnt = src.selectExpr(
         s"stack($CmsRows, ${(0 until CmsRows)
           .map(r => s"$r, b$r").mkString(", ")}) AS (r, b)")
@@ -3575,16 +3545,13 @@ object Relational {
         col("est_count").cast("long"))
       .orderBy(col("est_count").desc, col("p_partkey"))
       .limit(20)
-    if (!audit) top
-    else {
-      val exact = src.groupBy("k").agg(count(lit(1)).as("exact_count"))
-        .select(col("k").cast("long").as("p_partkey"), col("exact_count"))
-      top.join(exact, Seq("p_partkey"), "left")
-        .select(col("p_partkey"), col("est_count"),
-          coalesce(col("exact_count"), lit(0L)).cast("long")
-            .as("exact_count"))
-        .orderBy(col("est_count").desc, col("p_partkey"))
-    }
+    val exact = src.groupBy("k").agg(count(lit(1)).as("exact_count"))
+      .select(col("k").cast("long").as("p_partkey"), col("exact_count"))
+    top.join(exact, Seq("p_partkey"), "left")
+      .select(col("p_partkey"), col("est_count"),
+        coalesce(col("exact_count"), lit(0L)).cast("long")
+          .as("exact_count"))
+      .orderBy(col("est_count").desc, col("p_partkey"))
   }
 
   // ---------------------------------------------------------------- q64

@@ -35,7 +35,7 @@ import org.apache.spark.sql.DataFrame
 object Width {
 
   /** The session's target width — `spark.sql.shuffle.partitions`, the
-    * same width [[EntityResolution]]'s maybeWiden and [[Dedup]]'s
+    * same width [[EntityResolution]]'s widen and [[Dedup]]'s
     * verifyParallelism pin (bench/Verify set it to the core count). */
   private[ops] def target(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt

@@ -1013,7 +1013,7 @@ object Ingest {
     * broadcast key join (no false negatives ⇒ reading the union is
     * output-identical to per-probe scans). Job count is O(1) in file
     * count — `IngestSpec`'s job-count test pins it by doubling the
-    * (config-gated) layout width and asserting no growth. */
+    * layout width of [[bloomFileSkipping]] and asserting no growth. */
   val in18 = Q("in18_bloom_file_skipping",
     """WITH kb AS (
       |  SELECT min(l_orderkey) AS kmin, max(l_orderkey) AS kmax
@@ -1036,16 +1036,17 @@ object Ingest {
       |FROM pk
       |LEFT JOIN lineitem l ON l.l_orderkey = pk.k
       |GROUP BY pk.probe
-      |ORDER BY pk.probe""".stripMargin) { (s, d) =>
+      |ORDER BY pk.probe""".stripMargin)(bloomFileSkipping(_, _, 8))
+
+  /** [[in18]]'s body over a lineitem copy laid out as `layoutFiles`
+    * shipdate-ranged files. */
+  private[graft] def bloomFileSkipping(s: SparkSession, d: String,
+      layoutFiles: Int): DataFrame = {
     val src = graft.model.Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_partkey"), col("l_shipdate"))
     val run = java.util.UUID.randomUUID().toString.take(8)
     val dataDir = s"$compactScratch/$run/bloom_indexed"
     val manifestDir = s"$compactScratch/$run/bloom_manifest"
-    // layout width is config-gated ONLY so In18JobCountSpec can pin
-    // that the job count does not grow with the file count
-    val layoutFiles =
-      s.conf.getOption("spark.graft.in18.files").map(_.toInt).getOrElse(8)
     src.repartitionByRange(layoutFiles, col("l_shipdate"))
       .sortWithinPartitions("l_shipdate")
       .write.mode("overwrite").parquet(dataDir)

@@ -32,36 +32,6 @@ import graft.ops.NewsPipeline
   */
 object StreamOps {
 
-  /** State-partition knob — SCALE.md №21's measured lesson made
-    * executable (r15 verdict ask #5): state-store commit cost scales
-    * with the number of SHUFFLE PARTITIONS, not state volume (st01's
-    * window measured 3.4 k rows/s at 32 state partitions vs 9.5 k at
-    * 8 on the same box), so the engine default (partitions = cores)
-    * is wrong for small-state streams. Set this conf and every query
-    * started through the builders below pins its stateful shuffle
-    * width to it; Structured Streaming then freezes the value into
-    * the checkpoint at first start (`OffsetSeqMetadata`), so restarts
-    * keep it regardless of the session's batch setting. */
-  val StatePartitionsKey = "spark.graft.stream.statePartitions"
-
-  /** Starts a streaming query with `spark.sql.shuffle.partitions`
-    * overridden by [[StatePartitionsKey]] (when set) for the duration
-    * of the `.start()` call only — the started query's CLONED session
-    * captures the override (that is `DataStreamWriter.start`'s session
-    * -isolation contract), while the caller's batch session is
-    * restored immediately. `StreamingSpec` pins that the conf reaches
-    * the started plan's state operator. */
-  def startPinned(spark: SparkSession)(
-      start: => StreamingQuery): StreamingQuery =
-    spark.conf.getOption(StatePartitionsKey) match {
-      case Some(n) =>
-        val key = "spark.sql.shuffle.partitions"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, n)
-        try start finally spark.conf.set(key, prev)
-      case None => start
-    }
-
   case class Message(message: String, ts: Timestamp)
   case class UserEvent(user_id: Long, event_type: String, value: Double,
       ts: Timestamp)
@@ -136,13 +106,13 @@ object StreamOps {
       ckpt: String): StreamingQuery = {
     val s = events.sparkSession
     import s.implicits._
-    startPinned(s)(sessionCounts(events
+    sessionCounts(events
       .select(col("user_id"), col("event_type"), col("value"), col("ts"))
       .as[UserEvent]).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt)
       .format("parquet").option("path", outDir)
-      .start())
+      .start()
   }
 
   /** Per-window top-k ranking stage of the trending operator — shared
@@ -187,11 +157,11 @@ object StreamOps {
     * the bar itself is the streaming aggregate). */
   def ohlcBarsStream(events: DataFrame, outDir: String,
       ckpt: String): StreamingQuery =
-    startPinned(events.sparkSession)(ohlcBars(events).writeStream
+    ohlcBars(events).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt)
       .format("parquet").option("path", outDir)
-      .start())
+      .start()
 
   /** Daily distinct actives (DAU) — shared VERBATIM by the streaming
     * form and the st13 batch twin. The streaming plan CHAINS two
@@ -227,11 +197,11 @@ object StreamOps {
     * as the watermark closes each day. */
   def dailyActivesStream(events: DataFrame, outDir: String,
       ckpt: String): StreamingQuery =
-    startPinned(events.sparkSession)(dailyActives(events).writeStream
+    dailyActives(events).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt)
       .format("parquet").option("path", outDir)
-      .start())
+      .start()
 
   /** Streaming Count-Min sketch maintenance — a different streaming
     * shape from every windowed/keyed aggregation above: a GLOBAL
@@ -245,11 +215,10 @@ object StreamOps {
     * [[graft.ops.TextAnalysis.cmsCells]] function. Expects a `token`
     * column. */
   def cmsCellsStream(tokens: DataFrame, queryName: String): StreamingQuery =
-    startPinned(tokens.sparkSession)(
-      graft.ops.TextAnalysis.cmsCells(tokens).writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory").queryName(queryName)
-        .start())
+    graft.ops.TextAnalysis.cmsCells(tokens).writeStream
+      .outputMode(OutputMode.Complete())
+      .format("memory").queryName(queryName)
+      .start()
 
   /** Streaming HLL maintenance — st14's bounded-state shape applied to
     * CARDINALITY: the state is the 256-register table of
@@ -262,11 +231,10 @@ object StreamOps {
     * Expects the named key column on `src`. */
   def hllRegistersStream(src: DataFrame, column: String,
       queryName: String): StreamingQuery =
-    startPinned(src.sparkSession)(
-      graft.ops.Relational.hllRegisters(src, column).writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory").queryName(queryName)
-        .start())
+    graft.ops.Relational.hllRegisters(src, column).writeStream
+      .outputMode(OutputMode.Complete())
+      .format("memory").queryName(queryName)
+      .start()
 
   /** Streaming histogram-quantile maintenance — the sketch trio's third
     * member (st14 CMS / st15 HLL / this): q19c's fixed-boundary value
@@ -275,11 +243,10 @@ object StreamOps {
     * the whole current sketch each trigger and any quantile is one walk
     * over the emitted table. Batch twin: `EventStreams.st16`. */
   def valueHistStream(src: DataFrame, queryName: String): StreamingQuery =
-    startPinned(src.sparkSession)(
-      graft.ops.EventStreams.valueHistCells(src).writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory").queryName(queryName)
-        .start())
+    graft.ops.EventStreams.valueHistCells(src).writeStream
+      .outputMode(OutputMode.Complete())
+      .format("memory").queryName(queryName)
+      .start()
 
   /** Streaming trending top-k — the dashboard query ("most frequent
     * event types per hour, live"). Ranking inside a streaming
@@ -293,13 +260,13 @@ object StreamOps {
     * separated by the partitionBy). */
   def trendingTopKStream(events: Dataset[UserEvent], k: Int,
       outDir: String, ckpt: String): StreamingQuery =
-    startPinned(events.sparkSession)(windowedCounts(events).writeStream
+    windowedCounts(events).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", ckpt)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         writeBatch(trendingTopK(df, k), outDir, batchId)
       }
-      .start())
+      .start()
 
   /** Custom state: running per-user totals via `mapGroupsWithState` —
     * the engine's `KeyValueGroupedDataset` stateful surface (the [EXT]
@@ -396,12 +363,11 @@ object StreamOps {
     def side(t: String) = events.filter(col("event_type") === t)
       .select(col("user_id"), col("event_type"), col("value"), col("ts"))
       .as[UserEvent]
-    startPinned(events.sparkSession)(
-      clicksBeforePurchase(side("click"), side("purchase")).writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .format("parquet").option("path", outDir)
-        .start())
+    clicksBeforePurchase(side("click"), side("purchase")).writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", ckpt)
+      .format("parquet").option("path", outDir)
+      .start()
   }
 
   /** Streaming exact dedup — the streaming twin of the d01 batch op:
@@ -710,12 +676,12 @@ object StreamOps {
     * query is long-lived under the default trigger; the caller stops it. */
   def persistClassified(classified: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    startPinned(classified.sparkSession)(classified.writeStream
+    classified.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         writeBatch(batch.withColumn("created_at", current_timestamp()),
           outDir, batchId)
       }
-      .start())
+      .start()
 }

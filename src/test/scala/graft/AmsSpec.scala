@@ -68,25 +68,4 @@ class AmsSpec extends SparkSpec {
       assert(estA >= 0 && estB >= 0, s"$pair F2 sign")
     }
   }
-
-  test("q60: spark.graft.ams.audit=false is the sketch-only production form") {
-    val audited = byPair // force the default-conf run BEFORE flipping
-    spark.conf.set("spark.graft.ams.audit", "false")
-    try {
-      val prod = ops.Relational.q60.run(spark, sf)
-      // production schema drops the exact columns entirely
-      assert(prod.columns.toSeq ==
-        Seq("pair", "est_join", "est_f2_a", "est_f2_b"))
-      // the audit stage (per-key count agg + key-space join on w0) must
-      // be absent from the production plan, not just projected away
-      val plan = prod.queryExecution.executedPlan.toString
-      assert(!plan.contains("exact_join") && !plan.contains("ex_f2_a"),
-        plan.take(800))
-      // same sketch, same estimates: the gate changes cost, not answers
-      val prodRows = prod.collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      for ((pair, (estJ, _, estA, _, estB, _)) <- audited)
-        assert(prodRows(pair) == ((estJ, estA, estB)), pair)
-    } finally spark.conf.unset("spark.graft.ams.audit")
-  }
 }

@@ -300,18 +300,14 @@ class IngestSpec extends SparkSpec {
             j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
           jobs += 1
       }
-      spark.conf.set("spark.graft.in18.files", files.toString)
       spark.sparkContext.addSparkListener(listener)
       try {
-        sources.Ingest.in18.run(spark, sf).collect()
+        sources.Ingest.bloomFileSkipping(spark, sf, files).collect()
         // listener delivery is async; events post on job submission
         // so a short settle covers the final collect
         Thread.sleep(500)
         jobs
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.conf.unset("spark.graft.in18.files")
-      }
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
     val j8 = jobsAt(8)
     val j16 = jobsAt(16)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.functions.col
 
 /** Catalog-wide audit for the SCALE.md №15/№16 failure class: a
   * CPU-DENSE stage whose task width is inherited rather than chosen.
@@ -148,15 +149,18 @@ class ParallelismAuditSpec extends SparkSpec {
     }.flatten
 
   test("the pre-fix er01 comparator shape IS flagged (audit is live)") {
-    // widen=false restores the round-13 single-task shape: comparator
-    // projection directly in the broadcast-join output stage
-    spark.conf.set("spark.graft.er.widen", "false")
-    try {
-      val v = violations(initial(graft.ops.EntityResolution
-        .scoredPairs(spark, sf)))
-      assert(v.exists(_.contains("BoundedEditDistance")),
-        s"auditor missed the №16 single-task comparator shape: $v")
-    } finally spark.conf.set("spark.graft.er.widen", "true")
+    // scoredPairs without its input exchanges: the round-13 single-task
+    // shape, comparator projection directly in the broadcast-join
+    // output stage
+    val unwidened = graft.ops.EntityResolution.registry(spark, sf)
+      .join(graft.model.Tables.customer(spark, sf),
+        col("nat_b") === col("c_nationkey") &&
+          col("seg_b") === col("c_mktsegment"))
+      .selectExpr("b_id", "c_custkey",
+        "least(bounded_edit_distance(name_b, c_name, 3), 3) AS ed")
+    val v = violations(initial(unwidened))
+    assert(v.exists(_.contains("BoundedEditDistance")),
+      s"auditor missed the №16 single-task comparator shape: $v")
   }
 
   test("the fixed er01 comparator is NOT flagged (exchange in between)") {
@@ -167,7 +171,7 @@ class ParallelismAuditSpec extends SparkSpec {
 
   test("the NON-broadcast (SMJ) er01 regime is the audited known shape: " +
     "block-key exchanges set the width, input exchanges are bypassed") {
-    // r14 ADVICE: maybeWiden's input exchanges only guarantee width in
+    // r14 ADVICE: widen's input exchanges only guarantee width in
     // the broadcast regimes. Under autoBroadcastJoinThreshold=-1 Spark
     // plans an SMJ and inserts FRESH exchanges on the (nation, segment)
     // block keys (~125 distinct values) — the comparator collapses to
@@ -175,7 +179,7 @@ class ParallelismAuditSpec extends SparkSpec {
     // regime so it stays a KNOWN, audited shape: (a) the join really is
     // an SMJ, (b) its immediate children are exchanges on the join keys
     // (so the auditor's None-at-exchange answer is about THESE 125-way
-    // exchanges, not maybeWiden's), (c) the walker still reports no
+    // exchanges, not widen's), (c) the walker still reports no
     // broadcast-pinned width (vacuously — there is no broadcast join).
     // The estate-scale fix is a higher-cardinality block key (linksProd)
     // — not a wider exchange on a 125-value key.

@@ -504,7 +504,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"),
       plan.take(1500))
     // the №20 v2 comparator-width claim: the join INPUTS are exchanged
-    // (maybeWiden), so the join + DP + filter stage is
+    // (widen), so the join + DP + filter stage is
     // shuffle-partitions wide and nothing pair-sized crosses a shuffle
     // (ParallelismAuditSpec proves the stage-width structure; this
     // pins that the explicit input exchanges are present at all)
@@ -863,24 +863,23 @@ class PlanAuditSpec extends SparkSpec {
     // r11 ADVICE: with the card checkpointed inside run(), the returned
     // plan's scans are ExistingRDD — zero FileScan lines, and a
     // forall() over an empty list passes no matter where the card was
-    // computed from. Disable the (default-on) checkpoint gate so the
-    // shipped card's REAL scan provenance is in the plan, and require
-    // the scan list non-empty so a plan-shape change fails loudly.
-    spark.conf.set("spark.graft.p20.checkpoint", "false")
-    try {
-      val plan = executedPlan("p20_curated_release")
-      val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
-      assert(scans.nonEmpty,
-        s"expected the un-checkpointed card to scan the published release:\n${plan.take(1200)}")
-      // a FileScan over documents here would mean the shipped card was
-      // recomputed from the SOURCE, not from what was actually published
-      assert(scans.forall(_.contains("/published/")),
-        s"card plan scans a non-published location:\n${scans.mkString("\n").take(800)}")
-      // the 1-row token total attach is the one allowed broadcast nested
-      // loop; nothing else quadratic
-      assert(!plan.replace("BroadcastNestedLoopJoin", "").contains("NestedLoop")
-        && !plan.contains("CartesianProduct"), plan.take(800))
-    } finally spark.conf.set("spark.graft.p20.checkpoint", "true")
+    // computed from. Build the release with the card un-checkpointed so
+    // the shipped card's REAL scan provenance is in the plan, and
+    // require the scan list non-empty so a plan-shape change fails
+    // loudly.
+    val plan = graft.ops.CleanCorpus.curatedRelease(spark, sf, identity)
+      .queryExecution.executedPlan.toString
+    val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
+    assert(scans.nonEmpty,
+      s"expected the un-checkpointed card to scan the published release:\n${plan.take(1200)}")
+    // a FileScan over documents here would mean the shipped card was
+    // recomputed from the SOURCE, not from what was actually published
+    assert(scans.forall(_.contains("/published/")),
+      s"card plan scans a non-published location:\n${scans.mkString("\n").take(800)}")
+    // the 1-row token total attach is the one allowed broadcast nested
+    // loop; nothing else quadratic
+    assert(!plan.replace("BroadcastNestedLoopJoin", "").contains("NestedLoop")
+      && !plan.contains("CartesianProduct"), plan.take(800))
   }
 
   test("q63: CMS grid lookups broadcast; no cartesian anywhere") {

@@ -142,36 +142,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.sorted.toSeq == Seq("alpha doc", "beta doc"))
   }
 
-  test("statePartitions knob reaches the started query's state operator " +
-    "and the batch session is restored") {
-    // №21 made executable: state-store commit cost scales with shuffle
-    // partitions, so small-state streams get a pinned width via
-    // spark.graft.stream.statePartitions — this pins that the conf
-    // actually reaches the STARTED plan (the cloned session), not just
-    // the builder's intent, and that the caller's batch conf survives.
-    implicit val sql = spark.sqlContext
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(StreamOps.StatePartitionsKey, "3")
-    try {
-      val in = MemoryStream[String]
-      val q = StreamOps.cmsCellsStream(
-        in.toDF().withColumnRenamed("value", "token"), "pinned_cms")
-      in.addData("a", "b", "a")
-      q.processAllAvailable()
-      val stateOps = q.lastProgress.stateOperators
-      q.stop()
-      assert(stateOps.nonEmpty, "no state operator in the CMS plan")
-      assert(stateOps.head.numShufflePartitions == 3L,
-        s"state operator ran at ${stateOps.head.numShufflePartitions} " +
-          s"partitions — the №21 knob did not reach the started plan")
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == prevShuffle,
-        "startPinned leaked the override into the batch session")
-    } finally {
-      spark.conf.unset(StreamOps.StatePartitionsKey)
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-  }
-
   test("watermarked tumbling windows finalise in append mode") {
     implicit val sql = spark.sqlContext
     val in = MemoryStream[UserEvent]
