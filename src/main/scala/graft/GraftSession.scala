@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session settings for the engine.
@@ -17,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.extensions` = [[graft.plans.GraftExtensions]], the path a
   *    `spark-submit --conf` deployment takes: every session built here,
   *    and every `newSession()` of one, has the engine's SQL functions and
-  *    its two optimizer rewrites.
+  *    its three optimizer rewrites.
   *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl` =
   *    [[graft.sources.NioLocalFileSystem]] / [[graft.sources.NioLocalFs]]:
   *    without libhadoop, stock Hadoop forks `chmod`, `ls -ld` or
@@ -49,9 +50,30 @@ object GraftSession {
   /** Hex of a corpus dir's 96-bit md5 prefix: the name of every
     * per-corpus artifact. Not hashCode — a 32-bit collision between two
     * corpus dirs would silently serve one dir's artifact for the other. */
-  def corpusKey(d: String): String =
+  def corpusKey(d: String): String = md5Hex(d).take(24)
+
+  /** Hex md5 of the path, size and mtime of every file under `path` (or
+    * of `path` itself when it is a file), listed through the session's
+    * Hadoop `FileSystem`, so any scheme works. A cheap driver-side
+    * listing that reads no data: rewriting the files in place changes
+    * it, reading them does not. A missing path fingerprints as empty. */
+  def filesFingerprint(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val sig = scala.collection.mutable.ArrayBuffer[String]()
+    if (fs.exists(p)) {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        sig += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+      }
+    }
+    md5Hex(sig.sorted.mkString("|"))
+  }
+
+  private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(12)
+      .digest(s.getBytes("UTF-8"))
       .map(b => f"${b & 0xff}%02x").mkString
 
   // ~tens of MB per JVM once q44 has written its bucketed tables

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
@@ -609,12 +609,12 @@ object Dedup {
     * Both steps are plain groupBy-min + equi-join dataflow — no
     * neighborhood collect_list, so a 10⁸-degree hub costs a shuffle,
     * not executor memory. Fixpoint = the edge set is unchanged across
-    * a full round, detected by a (count, hash-sum) checksum — one tiny
-    * action per round (the hashes fold with `bit_xor` — overflow-free
-    * under ANSI mode and order-independent; the edge set is distinct,
-    * so aliasing would need a hash collision AND an equal count on a
-    * CHANGED set within one round — not the monotone-counter aliasing
-    * a label sum has). At
+    * a full round, detected by a (count, hash-sum) checksum that an
+    * `Observation` reads off the small-star checkpoint's own job (the
+    * hashes fold with `bit_xor` — overflow-free under ANSI mode and
+    * order-independent; the edge set is distinct, so aliasing would
+    * need a hash collision AND an equal count on a CHANGED set within
+    * one round — not the monotone-counter aliasing a label sum has). At
     * the fixpoint the graph is a disjoint union of stars centered at
     * component minima, so label(v) = min(v, min neighbor). */
   def connectedComponentsStars(nodes: DataFrame, edges: DataFrame,
@@ -641,10 +641,12 @@ object Dedup {
       val ss = smaller.join(minsS, "u")
         .select(col("v").as("u"), col("m").as("v"))
         .union(minsS.select(col("u"), col("m").as("v")))
-      e = toSym(ss).localCheckpoint()
-      val check = e.agg(count(lit(1)).cast("long"),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      val sig = (check.getLong(0), check.getLong(1))
+      val obs = Observation()
+      e = toSym(ss).observe(obs, count(lit(1)).as("n"),
+          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("h"))
+        .localCheckpoint()
+      val m = obs.get
+      val sig = (m("n").asInstanceOf[Long], m("h").asInstanceOf[Long])
       done = prev.contains(sig)
       prev = Some(sig)
       it += 1

@@ -61,27 +61,14 @@ object MLClassify {
   private[graft] def cachedKeys: Set[String] =
     scala.jdk.CollectionConverters.SetHasAsScala(cache.keySet).asScala.toSet
 
-  /** Corpus fingerprint folded into the model cache key: every file's
-    * name, size, and mtime under `<dir>/documents.parquet`. A dir-string
-    * key alone silently serves a stale model if the parquet is
-    * regenerated in place; the fingerprint makes the cache
-    * content-addressed at file-metadata granularity (cheap driver-side
-    * stat walk — no data read). The signature folds through md5 (full
-    * 128 bits — a 32-bit hashCode would make a silent stale-model
-    * collision merely unlikely instead of negligible). */
-  private[graft] def corpusFingerprint(dir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val files = walk(new java.io.File(s"$dir/documents.parquet"))
-    val sig = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(sig.getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x").mkString
-    s"$dir#$hex"
-  }
+  /** Corpus fingerprint folded into the model cache key:
+    * `<dir>#<`[[graft.GraftSession.filesFingerprint]]` of
+    * <dir>/documents.parquet>` (every file's path, size and mtime). A
+    * dir-string key alone silently serves a stale model if the parquet
+    * is regenerated in place; the fingerprint makes the cache
+    * content-addressed at file-metadata granularity. */
+  private[graft] def corpusFingerprint(s: SparkSession, dir: String): String =
+    s"$dir#${graft.GraftSession.filesFingerprint(s, s"$dir/documents.parquet")}"
 
   /** Teacher-labelled training/serving frame: keyword-classified docs
     * with the sentinel class removed. */
@@ -176,7 +163,7 @@ object MLClassify {
   /** Rows-only driver check (model outputs aren't SQL-expressible). */
   val ml01 = Q.noOracle("ml01_mllib_classify") { (s, d) =>
     classifyWithModel(Tables.documents(s, d),
-      cacheKey = corpusFingerprint(d)).orderBy("doc_id")
+      cacheKey = corpusFingerprint(s, d)).orderBy("doc_id")
   }
 
   // --------------------------------------------------------------- ml02

@@ -4,10 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreePattern.HIGH_ORDER_FUNCTION
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.trees.TreePattern.{HIGH_ORDER_FUNCTION, UPPER_OR_LOWER}
+import org.apache.spark.sql.catalyst.util.CollationFactory
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StringType}
 
-import graft.functions.{DotProduct, GraftFunctions}
+import graft.functions.{BinaryCaseMap, DotProduct, GraftFunctions}
 
 /** Engine registration via `SparkSessionExtensions` (the custom planner
   * seam of SURVEY.md §4/§7.3 — the only one this engine needs):
@@ -17,12 +19,15 @@ import graft.functions.{DotProduct, GraftFunctions}
   *    `keyword_classify` / `head_summary` kernels
   *    (`NewsPipeline.kernelFunctions`) — becomes session functions with
   *    no per-query registry calls;
-  *  - `injectOptimizerRule`: [[RewriteDotProducts]] — auto-vectorisation
-  *    of the built-in higher-order-function dot-product idiom into the
-  *    codegen'd [[graft.functions.DotProduct]] loop — and
-  *    [[RewriteTopKPerKey]], which with `injectPlannerStrategy`
+  *  - `injectOptimizerRule`, three rewrites: [[RewriteDotProducts]] —
+  *    auto-vectorisation of the built-in higher-order-function
+  *    dot-product idiom into the codegen'd [[graft.functions.DotProduct]]
+  *    loop; [[RewriteTopKPerKey]], which with `injectPlannerStrategy`
   *    ([[TopKPerKeyStrategy]]) turns the dropped-rank `row_number() <= k`
-  *    window idiom into the sort-free bounded-heap [[TopKPerKeyExec]].
+  *    window idiom into the sort-free bounded-heap [[TopKPerKeyExec]];
+  *    and [[RewriteCaseMappings]], which runs `upper`/`lower` as
+  *    [[graft.functions.BinaryCaseMap]], the same ICU case mapping
+  *    without the 1.1 s class initializer Spark's own path pays.
   *
   * Usage: `--conf spark.sql.extensions=graft.plans.GraftExtensions`, which
   * [[graft.GraftSession.configure]] sets on every session it builds.
@@ -33,6 +38,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       .foreach(e.injectFunction)
     e.injectOptimizerRule(_ => RewriteDotProducts)
     e.injectOptimizerRule(_ => RewriteTopKPerKey)
+    e.injectOptimizerRule(_ => RewriteCaseMappings)
     e.injectPlannerStrategy(_ => TopKPerKeyStrategy)
   }
 }
@@ -108,5 +114,27 @@ object RewriteDotProducts extends Rule[LogicalPlan] {
             isCastMultiply(zipFn) && isSumMerge(mergeFn) &&
             isIdentityFinish(finishFn) =>
         DotProduct(a, b)
+    }
+}
+
+/** Rewrites `upper(x)` / `lower(x)` into [[BinaryCaseMap]] when ICU case
+  * mappings are on (`spark.sql.icu.caseMappings.enabled`, the default)
+  * and `x` is UTF8_BINARY: the one configuration in which the built-in
+  * evaluates `CollationAwareUTF8String.toUpperCase/toLowerCase`, whose
+  * body [[BinaryCaseMap.exec]] repeats without that class's 1.1 s
+  * static title-case table. Other collations and the non-ICU mapping
+  * keep the built-in. Pruned to plans that contain `upper`/`lower`. */
+object RewriteCaseMappings extends Rule[LogicalPlan] {
+
+  private def isBinary(e: Expression): Boolean = e.dataType match {
+    case st: StringType => st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID
+    case _ => false
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (!conf.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)) plan
+    else plan.transformAllExpressionsWithPruning(_.containsPattern(UPPER_OR_LOWER)) {
+      case Upper(c) if isBinary(c) => BinaryCaseMap(c, upper = true)
+      case Lower(c) if isBinary(c) => BinaryCaseMap(c, upper = false)
     }
 }

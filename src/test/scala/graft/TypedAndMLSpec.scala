@@ -95,14 +95,14 @@ class TypedAndMLSpec extends SparkSpec {
       val dir = tmp.getAbsolutePath
       model.Tables.documents(spark, sf).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
-      val fp1 = ops.MLClassify.corpusFingerprint(dir)
+      val fp1 = ops.MLClassify.corpusFingerprint(spark, dir)
       ops.MLClassify.classifyWithModel(
         model.Tables.documents(spark, dir), cacheKey = fp1).head()
       assert(ops.MLClassify.cachedKeys.contains(fp1))
       // regenerate in place with different content (size changes too)
       model.Tables.documents(spark, sf).limit(400).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
-      val fp2 = ops.MLClassify.corpusFingerprint(dir)
+      val fp2 = ops.MLClassify.corpusFingerprint(spark, dir)
       assert(fp2 != fp1, "fingerprint must change when the parquet is rewritten")
       val out = ops.MLClassify.classifyWithModel(
         model.Tables.documents(spark, dir), cacheKey = fp2)
