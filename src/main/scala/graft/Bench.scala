@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.graft.FreePersisted
+import org.json4s.{JDouble, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 /** Driver-run benchmark: one JSON line with per-query seconds at the
   * SPARK_GRAFT_SF_DIR scale factor.
@@ -134,31 +136,27 @@ object Bench {
     "q13_scalar_pack", "t01_token_stats", "g01_pagerank",
     "d03_minhash_lsh")
 
-  /** Minimal extractors for the bench's OWN JSON artifacts (anchors,
-    * prev-round queries, the child run's detail line) — the files are
-    * written by this object in a known flat shape, so a real JSON
-    * parser (unavailable offline) is not needed. */
-  private[graft] def parseJsonMap(text: String, key: String): Map[String, Double] = {
-    val i = text.indexOf("\"" + key + "\":{")
-    if (i < 0) Map.empty
-    else {
-      val start = text.indexOf('{', i)
-      val end = text.indexOf('}', start)
-      if (end < 0) Map.empty
-      else {
-        val Pair = """"([^"]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
-        Pair.findAllMatchIn(text.substring(start + 1, end))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+  /** Readers for the bench's OWN JSON artifacts (anchors, prev-round
+    * queries, the child run's detail line), by top-level `key`: the
+    * numeric members of an object, a number, a string. A missing key or
+    * a value of another type reads as empty. */
+  private[graft] def parseJsonMap(text: String, key: String): Map[String, Double] =
+    JsonMethods.parse(text) \ key match {
+      case JObject(fields) =>
+        fields.flatMap { case (k, v) => jsonNum(v).map(k -> _) }.toMap
+      case _ => Map.empty
     }
-  }
-  private[graft] def parseJsonNum(text: String, key: String): Option[Double] = {
-    val P = ("\"" + key + "\":(-?[0-9]+(?:\\.[0-9]+)?)").r
-    P.findFirstMatchIn(text).map(_.group(1).toDouble)
-  }
-  private[graft] def parseJsonStr(text: String, key: String): Option[String] = {
-    val P = ("\"" + key + "\":\"([^\"]+)\"").r
-    P.findFirstMatchIn(text).map(_.group(1))
+  private[graft] def parseJsonNum(text: String, key: String): Option[Double] =
+    jsonNum(JsonMethods.parse(text) \ key)
+  private[graft] def parseJsonStr(text: String, key: String): Option[String] =
+    JsonMethods.parse(text) \ key match {
+      case JString(s) => Some(s)
+      case _ => None
+    }
+  private def jsonNum(v: JValue): Option[Double] = v match {
+    case JInt(n) => Some(n.toDouble)
+    case JDouble(n) => Some(n)
+    case _ => None
   }
 
   /** Swing-flagging rule for the automatic isolated re-measure: the

@@ -37,14 +37,14 @@ object GraftSession {
     * otherwise accumulate in /tmp, one per bench/verify/test JVM. */
   def scratchDir(name: String): String = {
     val dir = s"/tmp/graft-$name-${ProcessHandle.current().pid()}"
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(dir))
-    }
+    sys.addShutdownHook(deleteRecursively(new java.io.File(dir)))
     dir
+  }
+
+  /** Deletes `f` and, for a directory, everything under it. */
+  def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
+    f.delete(): Unit
   }
 
   /** Hex of a corpus dir's 96-bit md5 prefix: the name of every

@@ -23,7 +23,17 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
   *    CPU seconds, the CPU seconds of single-task stages and the top-3
   *    stages by CPU as `[tasks, cpu]`. A single-row-group scan is one
   *    task whatever the core count, so a CPU-dense kernel below the
-  *    first exchange shows up as `one_task_cpu`.
+  *    first exchange shows up as `one_task_cpu`. Every counted job is
+  *    the query's own (none starts after its sink returns), but the
+  *    count is not fixed run to run: when both inputs of a sort-merge
+  *    join run as concurrent query stages, adaptive execution turns
+  *    the join into a broadcast join on whichever small side finishes
+  *    first, and the two plans can differ by one broadcast or shuffle
+  *    job (at sf0.01, s03 reads 8 or 9 jobs and g12 65 or 66). Two
+  *    runs of one build thus differ by up to one job per such join:
+  *    compare counts over several passes. A table's first read in the
+  *    JVM also starts one schema-inference job, so a query's count
+  *    depends on what ran before it.
   *  - `plan`: prints each query's formatted physical plan without
   *    executing it. `exec` runs the query first and prints the final
   *    adaptive plan: some width collapses exist only in AQE's runtime

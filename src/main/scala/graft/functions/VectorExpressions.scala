@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -139,8 +138,7 @@ case class CosineSimilarityD(left: Expression, right: Expression)
 /** The engine's SQL function surface, declared once: the expressions are
   * reachable from SQL (`expr("cosine_sim(a, b)")`) without Spark's
   * non-public Column constructors. [[graft.plans.GraftExtensions]]
-  * injects [[table]] into every `GraftSession.configure` session;
-  * [[register]] installs it on a session built elsewhere. */
+  * injects [[table]] into every `GraftSession.configure` session. */
 object GraftFunctions {
   type Entry = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
@@ -167,19 +165,6 @@ object GraftFunctions {
       e => NGramExplode(e(0), intArg(e(1)))),
     entry(classOf[KmvSketchAgg], "kmv_sketch")(
       e => KmvSketchAgg(e(0), intArg(e(1)))))
-
-  /** Installs the [[table]] entries `spark`'s session lacks. */
-  def register(spark: SparkSession): Unit = registerMissing(spark, table)
-
-  /** Installs each entry `spark`'s session lacks: re-registering a name
-    * replaces its entry and logs a WARN on every call. */
-  private[graft] def registerMissing(
-      spark: SparkSession, entries: Seq[Entry]): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    entries.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
-    }
-  }
 
   /** Optional 2nd arg of `simhash64`: a literal hash-family name —
     * 'md5' (oracle-recomputable) or 'fnv' (production default). */

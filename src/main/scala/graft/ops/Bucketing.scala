@@ -28,13 +28,7 @@ object Bucketing {
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
       .stripPrefix("file:")
     val loc = new java.io.File(warehouse, name)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(loc)
-    }
+    graft.GraftSession.deleteRecursively(loc)
     df.write.mode("overwrite")
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(name)

@@ -57,12 +57,10 @@ object Dedup {
     * switches to the production FNV-1a family, whose 3-op-per-byte token
     * hash is what the fingerprint pass pays at corpus scale (md5 is a
     * per-token digest allocation — measured +34% on d05 at sf0.1). */
-  private[ops] def simhashCol(s: SparkSession): Column = {
-    graft.functions.GraftFunctions.register(s)
+  private[ops] def simhashCol(s: SparkSession): Column =
     if (s.conf.get("spark.graft.fasthash", "false").toBoolean)
       expr("simhash64(split(text, ' '))")
     else expr("simhash64(split(text, ' '), 'md5')")
-  }
 
   /** Deterministic input bound for the O(n²) validation twins (d02, d04,
     * d05 here; s01 in [[Similarity]]): when

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Q
@@ -77,6 +77,19 @@ object EventStreams {
   private def events(s: SparkSession, d: String): DataFrame = {
     val raw = Tables.events(s, d)
     raw.withColumn("ts", eventTs(raw))
+  }
+
+  /** The `events` of one `event_type` as the stream functions' input
+    * type: the batch twins (st05, st06, st08, …) call the same
+    * [[graft.streaming.StreamOps]] function the stream runs. */
+  private def eventsOfType(s: SparkSession, d: String,
+      t: String): Dataset[graft.streaming.StreamOps.UserEvent] = {
+    import s.implicits._
+    events(s, d)
+      .filter(col("event_type") === t)
+      .select(col("user_id"), col("event_type"), col("value"),
+        col("ts").cast("timestamp").as("ts"))
+      .as[graft.streaming.StreamOps.UserEvent]
   }
 
   // --------------------------------------------------------------- st01
@@ -212,13 +225,9 @@ object EventStreams {
       |  ON p.user_id = c.user_id
       | AND c.ts >= p.ts - INTERVAL '10 minutes' AND c.ts <= p.ts
       |ORDER BY 1, 2, 3""".stripMargin) { (s, d) =>
-    import s.implicits._
-    def side(t: String) = events(s, d)
-      .filter(col("event_type") === t)
-      .select(col("user_id"), col("event_type"), col("value"),
-        col("ts").cast("timestamp").as("ts"))
-      .as[graft.streaming.StreamOps.UserEvent]
-    graft.streaming.StreamOps.clicksBeforePurchase(side("click"), side("purchase"))
+    graft.streaming.StreamOps
+      .clicksBeforePurchase(eventsOfType(s, d, "click"),
+        eventsOfType(s, d, "purchase"))
       .select(col("user_id"),
         col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
         col("click_ts").cast("timestamp_ntz").as("click_ts"),
@@ -243,16 +252,11 @@ object EventStreams {
       |  ON p.user_id = c.user_id
       | AND c.ts >= p.ts - INTERVAL '10 minutes' AND c.ts <= p.ts
       |ORDER BY 1, 2, 3""".stripMargin) { (s, d) =>
-    import s.implicits._
-    def side(t: String) = events(s, d)
-      .filter(col("event_type") === t)
-      .select(col("user_id"), col("event_type"), col("value"),
-        col("ts").cast("timestamp").as("ts"))
-      .as[graft.streaming.StreamOps.UserEvent]
     // null click columns take the st04 open-interval sentinel so every
     // output column stays orderable/comparable (NaT breaks row sorting)
     graft.streaming.StreamOps
-      .clicksBeforePurchaseOuter(side("click"), side("purchase"))
+      .clicksBeforePurchaseOuter(eventsOfType(s, d, "click"),
+        eventsOfType(s, d, "purchase"))
       .select(col("user_id"),
         col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
         coalesce(col("click_ts").cast("timestamp_ntz"),
@@ -283,16 +287,11 @@ object EventStreams {
       |  ON p.user_id = c.user_id
       | AND c.ts >= p.ts - INTERVAL '10 minutes' AND c.ts <= p.ts
       |ORDER BY 1, 2, 3, 4, 5""".stripMargin) { (s, d) =>
-    import s.implicits._
-    def side(t: String) = events(s, d)
-      .filter(col("event_type") === t)
-      .select(col("user_id"), col("event_type"), col("value"),
-        col("ts").cast("timestamp").as("ts"))
-      .as[graft.streaming.StreamOps.UserEvent]
     val sentinel = lit("9999-12-31 00:00:00")
       .cast(org.apache.spark.sql.types.TimestampNTZType)
     graft.streaming.StreamOps
-      .clicksPurchasesFullOuter(side("click"), side("purchase"))
+      .clicksPurchasesFullOuter(eventsOfType(s, d, "click"),
+        eventsOfType(s, d, "purchase"))
       .select(col("user_id"),
         coalesce(col("purchase_ts").cast("timestamp_ntz"), sentinel)
           .as("purchase_ts"),
@@ -693,14 +692,9 @@ object EventStreams {
       |  CAST(n AS BIGINT) AS n_touches
       |FROM r WHERE rn = 1
       |ORDER BY user_id, purchase_ts""".stripMargin) { (s, d) =>
-    import s.implicits._
-    def side(t: String) = events(s, d)
-      .filter(col("event_type") === t)
-      .select(col("user_id"), col("event_type"), col("value"),
-        col("ts").cast("timestamp").as("ts"))
-      .as[graft.streaming.StreamOps.UserEvent]
     graft.streaming.StreamOps
-      .lastTouchAttribution(side("click"), side("purchase"))
+      .lastTouchAttribution(eventsOfType(s, d, "click"),
+        eventsOfType(s, d, "purchase"))
       .select(col("user_id"),
         col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
         col("purchase_value"),
@@ -822,14 +816,9 @@ object EventStreams {
       |  WHERE c.user_id = p.user_id
       |    AND c.ts >= p.ts - INTERVAL '10 minutes' AND c.ts <= p.ts)
       |ORDER BY 1, 2""".stripMargin) { (s, d) =>
-    import s.implicits._
-    def side(t: String) = events(s, d)
-      .filter(col("event_type") === t)
-      .select(col("user_id"), col("event_type"), col("value"),
-        col("ts").cast("timestamp").as("ts"))
-      .as[graft.streaming.StreamOps.UserEvent]
     graft.streaming.StreamOps
-      .purchasesWithPriorClick(side("click"), side("purchase"))
+      .purchasesWithPriorClick(eventsOfType(s, d, "click"),
+        eventsOfType(s, d, "purchase"))
       .select(col("user_id"),
         col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
         col("purchase_value"))
@@ -885,14 +874,9 @@ object EventStreams {
       |  WHERE c.user_id = p.user_id
       |    AND c.ts >= p.ts - INTERVAL '10 minutes' AND c.ts <= p.ts)
       |ORDER BY 1, 2""".stripMargin) { (s, d) =>
-    import s.implicits._
-    def side(t: String) = events(s, d)
-      .filter(col("event_type") === t)
-      .select(col("user_id"), col("event_type"), col("value"),
-        col("ts").cast("timestamp").as("ts"))
-      .as[graft.streaming.StreamOps.UserEvent]
     graft.streaming.StreamOps
-      .purchasesWithoutPriorClick(side("click"), side("purchase"))
+      .purchasesWithoutPriorClick(eventsOfType(s, d, "click"),
+        eventsOfType(s, d, "purchase"))
       .select(col("user_id"),
         col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"),
         col("purchase_value"))

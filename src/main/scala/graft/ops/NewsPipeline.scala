@@ -73,19 +73,12 @@ object NewsPipeline {
   /** [[classify]]'s and [[summarize]]'s kernels as SQL functions over
     * [[lexicon]]. Spark keeps the Expression → Column path private, so
     * they reach the DataFrame API through the session's function
-    * registry: once per session via [[withKernels]], or session-wide
-    * from [[graft.plans.GraftExtensions]]. */
+    * registry, where [[graft.plans.GraftExtensions]] installs them. */
   private[graft] val kernelFunctions: Seq[GraftFunctions.Entry] = Seq(
     GraftFunctions.entry(classOf[KeywordClassify], "keyword_classify")(
       e => KeywordClassify(e.head, keywordLexicon)),
     GraftFunctions.entry(classOf[HeadSummary], "head_summary")(
       e => HeadSummary(e.head)))
-
-  /** Registers [[kernelFunctions]] on `df`'s session unless present. */
-  private def withKernels(df: DataFrame): DataFrame = {
-    GraftFunctions.registerMissing(df.sparkSession, kernelFunctions)
-    df
-  }
 
   /** Adds `category` (top-1 label, first-in-lexicon-order tiebreak) and
     * `confidence` (top score / total score; 0.0 + `unknown` when no
@@ -99,8 +92,7 @@ object NewsPipeline {
     * byte scan (every keyword is ASCII); [[classifiedCte]] is the same
     * formula in DuckDB SQL. */
   def classify(df: DataFrame, textCol: String = "text"): DataFrame =
-    withKernels(df)
-      .withColumn("__cls", expr(s"keyword_classify(`$textCol`)"))
+    df.withColumn("__cls", expr(s"keyword_classify(`$textCol`)"))
       .withColumn("category", col("__cls.category"))
       .withColumn("confidence", col("__cls.confidence"))
       .drop("__cls")
@@ -145,8 +137,7 @@ object NewsPipeline {
     * [[graft.functions.HeadSummary]] in one scan; [[summarySql]] is the
     * DuckDB form. */
   def summarize(df: DataFrame, textCol: String = "text"): DataFrame =
-    withKernels(df)
-      .withColumn("__sum", expr(s"head_summary(`$textCol`)"))
+    df.withColumn("__sum", expr(s"head_summary(`$textCol`)"))
       .withColumn("summary", col("__sum.summary"))
       .withColumn("n_words", col("__sum.n_words"))
       .withColumn("budget", col("__sum.budget"))

@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Q
-import graft.functions.GraftFunctions
 import graft.model.Tables
 
 /** Approximate-nearest-neighbour search over the `embeddings` table
@@ -67,6 +66,128 @@ object Similarity {
     s"${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"
   }
 
+  // ------------------------------------------------- shared ANN stages
+  // The s-queries compose the same few stages of top-k search:
+  // candidate generation (IVF probe, PQ shortlist, graph hops), exact
+  // re-rank, top-k. Each stage has one Spark builder and, where the
+  // oracles repeat it, one DuckDB CTE.
+
+  /** Oracle finish: the top `k` rows of CTE `from`(query_id,
+    * neighbor_id, `by`) per query, `by` DESC, ties by neighbor_id. */
+  private def topSql(from: String, by: String = "cos", k: Int = 5): String =
+    s"""ranked AS (
+       |  SELECT query_id, neighbor_id,
+       |         row_number() OVER (PARTITION BY query_id
+       |                            ORDER BY $by DESC, neighbor_id) AS rank
+       |  FROM $from)
+       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
+       |FROM ranked WHERE rank <= $k
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** Oracle CTEs `e` (the corpus, plus `extra` columns) and `c`, the
+    * [[centroidTable]]. */
+  private def corpusSql(extra: String = ""): String =
+    s"""e AS (SELECT vec_id, embedding$extra FROM embeddings),
+       |c AS (SELECT vec_id AS cid, embedding FROM e WHERE vec_id < 16)""".stripMargin
+
+  /** Oracle CTE `q`: the [[queries]]. */
+  private def queriesSql(extra: String = ""): String =
+    s"q AS (SELECT vec_id AS query_id, embedding$extra FROM e WHERE vec_id < 10)"
+
+  /** Oracle CTE `name`(vec_id, [label,] cid): [[assignToCentroids]]
+    * against the centroid relation `cents` (aliased `c`). */
+  private def assignSql(name: String = "assign", cents: String = "c",
+      label: Boolean = false): String = {
+    val l = if (label) "label, " else ""
+    s"""$name AS (
+       |  SELECT vec_id, ${l}cid FROM (
+       |    SELECT e.vec_id, ${if (label) "e.label, " else ""}c.cid,
+       |           row_number() OVER (PARTITION BY e.vec_id
+       |                              ORDER BY ${cosSql("e", "c")} DESC, c.cid) AS rn
+       |    FROM e, $cents)
+       |  WHERE rn = 1)""".stripMargin
+  }
+
+  /** Oracle: every (query, centroid) pair of `q` × `cents` with its
+    * probe rank `prn` ([[probeRanks]]). */
+  private def probeRanksSql(cents: String): String =
+    s"""SELECT q.query_id, c.cid,
+       |         row_number() OVER (PARTITION BY q.query_id
+       |                            ORDER BY ${cosSql("q", "c")} DESC, c.cid) AS prn
+       |  FROM q, $cents""".stripMargin
+
+  /** Oracle CTE `probed`(query_id, cid): each query's P=4 nearest lists. */
+  private def probedSql(cents: String = "c"): String =
+    s"""probed AS (
+       |  SELECT query_id, cid FROM (
+       |  ${probeRanksSql(cents)})
+       |  WHERE prn <= 4)""".stripMargin
+
+  /** Oracle twin of [[ivfTop5]]: queries, probe of `cents`, members of
+    * the probed lists in `assign`, exact cosine top-5. */
+  private def ivfTopSql(cents: String, assign: String): String =
+    s"""${queriesSql()},
+       |${probedSql(cents)},
+       |scored AS (
+       |  SELECT p.query_id, a.vec_id AS neighbor_id, ${cosSql("q", "e")} AS cos
+       |  FROM probed p
+       |  JOIN $assign a ON a.cid = p.cid AND a.vec_id <> p.query_id
+       |  JOIN q ON q.query_id = p.query_id
+       |  JOIN e ON e.vec_id = a.vec_id),
+       |${topSql("scored")}""".stripMargin
+
+  /** The query set: the first 10 vectors of `e` as (query_id,
+    * q_embedding, `extra`…). */
+  private def queries(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < 10)
+      .select(Seq(col("vec_id").as("query_id"),
+        col("embedding").as("q_embedding")) ++ extra: _*)
+
+  /** Exact re-rank finish: each query's top 5 rows of `cand` by `score`
+    * (named `by`) DESC, ties by neighbor_id (the `neighbor` column), as
+    * (query_id, neighbor_id, rank) sorted by query and rank. */
+  private def top5(cand: DataFrame, neighbor: String, score: Column,
+      by: String = "cos"): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col(by).desc, col("neighbor_id"))
+    cand.select(col("query_id"), col(neighbor).as("neighbor_id"), score.as(by))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= 5)
+      .select("query_id", "neighbor_id", "rank")
+      .orderBy("query_id", "rank")
+  }
+
+  /** IVF probe ranks: every query of `q` against the broadcast centroid
+    * table `c`, ranked `prn` by `sim`(q_embedding, c_embedding) DESC,
+    * ties by cid, keeping `carry` of the query columns. */
+  private def probeRanks(q: DataFrame, c: DataFrame, carry: Seq[String],
+      sim: String = "cosine_sim"): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cos").desc, col("cid"))
+    q.join(broadcast(c))
+      .select((carry :+ "cid").map(col) :+
+        expr(s"$sim(q_embedding, c_embedding)").as("cos"): _*)
+      .withColumn("prn", row_number().over(w))
+  }
+
+  /** IVF probe: each query's `nprobe` nearest lists, as `carry` + cid. */
+  private def probe(q: DataFrame, c: DataFrame, nprobe: Int,
+      carry: Seq[String], sim: String = "cosine_sim"): DataFrame =
+    probeRanks(q, c, carry, sim)
+      .filter(col("prn") <= nprobe)
+      .select((carry :+ "cid").map(col): _*)
+
+  /** IVF retrieval over the corpus `e`, centroid table `c` and list
+    * assignment `assign`(vec_id, cid): each query's P=4 nearest lists,
+    * their members (self excluded) re-ranked by the exact `sim`. */
+  private def ivfTop5(e: DataFrame, c: DataFrame, assign: DataFrame,
+      sim: String): DataFrame =
+    top5(probe(queries(e), c, 4, Seq("query_id", "q_embedding"), sim)
+        .join(assign, "cid")
+        .filter(col("vec_id") =!= col("query_id"))
+        .join(e, "vec_id"),
+      "vec_id", expr(s"$sim(q_embedding, embedding)"))
+
   // ---------------------------------------------------------------- s01
   /** Exact top-5 neighbours for 10 query vectors, brute force. */
   val s01 = Q("s01_topk_cosine",
@@ -76,30 +197,13 @@ object Similarity {
        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
        |         ${cosSql("q", "e")} AS cos
        |  FROM q JOIN e ON e.vec_id <> q.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+       |${topSql("scored")}""".stripMargin) { (s, d) =>
     // O(Q·n) brute-force validation twin of s02/s03 — bounded at bench
     // time by the same deterministic cap as Dedup's quadratic twins.
     val e = Dedup.validationCap(s, Tables.embeddings(s, d), "vec_id",
       "spark.graft.validation.cap.vecs").select(col("vec_id"), col("embedding"))
-    val q = e.filter(col("vec_id") < 10)
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("embedding", "q_embedding")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("cosine_sim(q_embedding, embedding)").as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
+    top5(e.join(broadcast(queries(e)), col("vec_id") =!= col("query_id")),
+      "vec_id", expr("cosine_sim(q_embedding, embedding)"))
   }
 
   // ---------------------------------------------------------------- s02
@@ -113,14 +217,7 @@ object Similarity {
        |  SELECT x.vec_id AS query_id, y.vec_id AS neighbor_id,
        |         ${cosSql("x", "y")} AS cos
        |  FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM pairs)
-       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
-       |FROM ranked WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+       |${topSql("pairs", k = 3)}""".stripMargin) { (s, d) =>
     val b = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), expr(bucketSpark).as("bucket"))
     val x = b.as("x")
@@ -173,61 +270,12 @@ object Similarity {
     * the other s-queries use → fully oracled, including the probe and
     * re-rank rankings. */
   val s03 = Q("s03_ivf_topk",
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |c AS (SELECT vec_id AS cid, embedding FROM e WHERE vec_id < 16),
-       |assign AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${cosSql("e", "c")} DESC, c.cid) AS rn
-       |    FROM e, c)
-       |  WHERE rn = 1),
-       |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 10),
-       |probed AS (
-       |  SELECT query_id, cid FROM (
-       |    SELECT q.query_id, c.cid,
-       |           row_number() OVER (PARTITION BY q.query_id
-       |                              ORDER BY ${cosSql("q", "c")} DESC, c.cid) AS prn
-       |    FROM q, c)
-       |  WHERE prn <= 4),
-       |scored AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id, ${cosSql("q", "e")} AS cos
-       |  FROM probed p
-       |  JOIN assign a ON a.cid = p.cid AND a.vec_id <> p.query_id
-       |  JOIN q ON q.query_id = p.query_id
-       |  JOIN e ON e.vec_id = a.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+    s"""WITH ${corpusSql()},
+       |${assignSql()},
+       |${ivfTopSql("c", "assign")}""".stripMargin) { (s, d) =>
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val c = centroidTable(e)
-    val assign = assignToCentroids(e, c)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("cid"))
-    val probed = q.join(broadcast(c))
-      .select(col("query_id"), col("q_embedding"), col("cid"),
-        expr("cosine_sim(q_embedding, c_embedding)").as("cos"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= 4)
-      .select("query_id", "q_embedding", "cid")
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    probed.join(assign, "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(e, "vec_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("cosine_sim(q_embedding, embedding)").as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
+    ivfTop5(e, c, assignToCentroids(e, c), "cosine_sim")
   }
 
   // ---------------------------------------------------------------- s04
@@ -247,6 +295,80 @@ object Similarity {
     s"""list_sum(list_transform(generate_series(1, 8),
        |  k -> (CAST($a.embedding[m*8+k] AS DOUBLE) - CAST($b.embedding[m*8+k] AS DOUBLE))
        |     * (CAST($a.embedding[m*8+k] AS DOUBLE) - CAST($b.embedding[m*8+k] AS DOUBLE))))""".stripMargin
+
+  /** Oracle CTEs `ms` (the M=8 subspaces) and `codes`(vec_id, m, code):
+    * [[pqCodes]]. */
+  private val pqCodesSql: String =
+    s"""ms AS (SELECT unnest(range(8)) AS m),
+       |codes AS (
+       |  SELECT vec_id, m, cid AS code FROM (
+       |    SELECT e.vec_id, ms.m, c.cid,
+       |           row_number() OVER (PARTITION BY e.vec_id, ms.m
+       |                              ORDER BY ${subD2Sql("e", "c")} ASC, c.cid) AS rn
+       |    FROM e CROSS JOIN ms CROSS JOIN c)
+       |  WHERE rn = 1)""".stripMargin
+
+  /** Oracle CTE `qd`(query_id, m, cid, d2): [[adcTable]]. */
+  private val pqQdSql: String =
+    s"""qd AS (
+       |  SELECT q.query_id, ms.m, c.cid,
+       |         CAST(${subD2Sql("q", "c")} AS DECIMAL(24,12)) AS d2
+       |  FROM q CROSS JOIN ms CROSS JOIN c)""".stripMargin
+
+  /** Oracle twin of [[pqRerank]] over CTE `adc`(query_id, vec_id, dist). */
+  private val pqRerankSql: String =
+    s"""short AS (
+       |  SELECT query_id, vec_id FROM (
+       |    SELECT query_id, vec_id,
+       |           row_number() OVER (PARTITION BY query_id
+       |                              ORDER BY dist ASC, vec_id) AS srn
+       |    FROM adc)
+       |  WHERE srn <= 50),
+       |scored AS (
+       |  SELECT s.query_id, s.vec_id AS neighbor_id, ${cosSql("q", "e")} AS cos
+       |  FROM short s
+       |  JOIN q ON q.query_id = s.query_id
+       |  JOIN e ON e.vec_id = s.vec_id),
+       |${topSql("scored")}""".stripMargin
+
+  /** PQ encode: each vector of `e`'s argmin codebook entry of the
+    * broadcast `c` per 8-dim subspace, as (vec_id, m, code). */
+  private def pqCodes(e: DataFrame, c: DataFrame): DataFrame = {
+    val w = Window.partitionBy("vec_id", "m")
+      .orderBy(col("d2").asc, col("cid"))
+    e.select(col("vec_id"), col("embedding"),
+        explode(sequence(lit(0), lit(7))).as("m"))
+      .join(broadcast(c))
+      .select(col("vec_id"), col("m"), col("cid"),
+        expr(subD2Spark("embedding", "c_embedding")).as("d2"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("vec_id"), col("m"), col("cid").as("code"))
+  }
+
+  /** ADC lookup table: the squared L2 from each query's subspace m to
+    * every codebook entry, exact as DECIMAL(24,12) so the 8-way sum is
+    * associative, as (query_id, m, cid, d2). */
+  private def adcTable(q: DataFrame, c: DataFrame): DataFrame =
+    q.select(col("query_id"), col("q_embedding"),
+        explode(sequence(lit(0), lit(7))).as("m"))
+      .join(broadcast(c))
+      .select(col("query_id"), col("m"), col("cid"),
+        expr(subD2Spark("q_embedding", "c_embedding"))
+          .cast("decimal(24,12)").as("d2"))
+
+  /** PQ finish: each query's top-50 of `adc`(query_id, vec_id, dist) by
+    * dist, ties by vec_id, re-ranked by the exact cosine against `q`
+    * and the flat store `e`. */
+  private def pqRerank(adc: DataFrame, q: DataFrame, e: DataFrame): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("dist").asc, col("vec_id"))
+    val short = adc.withColumn("srn", row_number().over(w))
+      .filter(col("srn") <= 50)
+      .select("query_id", "vec_id")
+    top5(short.join(q, "query_id").join(e, "vec_id"),
+      "vec_id", expr("cosine_sim(q_embedding, embedding)"))
+  }
 
   /** Product-quantisation ANN — the memory-compression tier a 100 TB
     * vector corpus runs (Jégou et al., "Product Quantization for
@@ -269,90 +391,30 @@ object Similarity {
     * fold) and are summed as DECIMAL(24,12) so the 8-way ADC sum is
     * exact and associative — the groupBy order can't wobble a rank. */
   val s04 = Q("s04_pq_topk",
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |c AS (SELECT vec_id AS cid, embedding FROM e WHERE vec_id < 16),
-       |ms AS (SELECT unnest(range(8)) AS m),
-       |codes AS (
-       |  SELECT vec_id, m, cid AS code FROM (
-       |    SELECT e.vec_id, ms.m, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id, ms.m
-       |                              ORDER BY ${subD2Sql("e", "c")} ASC, c.cid) AS rn
-       |    FROM e CROSS JOIN ms CROSS JOIN c)
-       |  WHERE rn = 1),
-       |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 10),
-       |qd AS (
-       |  SELECT q.query_id, ms.m, c.cid,
-       |         CAST(${subD2Sql("q", "c")} AS DECIMAL(24,12)) AS d2
-       |  FROM q CROSS JOIN ms CROSS JOIN c),
+    s"""WITH ${corpusSql()},
+       |$pqCodesSql,
+       |${queriesSql()},
+       |$pqQdSql,
        |adc AS (
        |  SELECT qd.query_id, codes.vec_id, sum(qd.d2) AS dist
        |  FROM codes JOIN qd ON qd.m = codes.m AND qd.cid = codes.code
        |  WHERE codes.vec_id <> qd.query_id
        |  GROUP BY 1, 2),
-       |short AS (
-       |  SELECT query_id, vec_id FROM (
-       |    SELECT query_id, vec_id,
-       |           row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY dist ASC, vec_id) AS srn
-       |    FROM adc)
-       |  WHERE srn <= 50),
-       |scored AS (
-       |  SELECT s.query_id, s.vec_id AS neighbor_id, ${cosSql("q", "e")} AS cos
-       |  FROM short s
-       |  JOIN q ON q.query_id = s.query_id
-       |  JOIN e ON e.vec_id = s.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+       |$pqRerankSql""".stripMargin) { (s, d) =>
     // №27: the ×8 subvector explode and 128 subD2 evals per vector ride
     // the single embeddings split — spread to session width first.
     val e = graft.ops.Width.spread(
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
-    val c = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("embedding").as("c_embedding"))
-    val withM = e.select(col("vec_id"), col("embedding"),
-      explode(sequence(lit(0), lit(7))).as("m"))
-    val wCode = Window.partitionBy("vec_id", "m")
-      .orderBy(col("d2").asc, col("cid"))
-    val codes = withM.join(broadcast(c))
-      .select(col("vec_id"), col("m"), col("cid"),
-        expr(subD2Spark("embedding", "c_embedding")).as("d2"))
-      .withColumn("rn", row_number().over(wCode))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("m"), col("cid").as("code"))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val qd = q.select(col("query_id"), col("q_embedding"),
-        explode(sequence(lit(0), lit(7))).as("m"))
-      .join(broadcast(c))
-      .select(col("query_id"), col("m"), col("cid"),
-        expr(subD2Spark("q_embedding", "c_embedding"))
-          .cast("decimal(24,12)").as("d2"))
+    val c = centroidTable(e)
+    val codes = pqCodes(e, c)
+    val q = queries(e)
+    val qd = adcTable(q, c)
     val adc = codes.join(broadcast(qd),
         qd("m") === codes("m") && qd("cid") === codes("code") &&
           qd("query_id") =!= codes("vec_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("d2")).as("dist"))
-    val wShort = Window.partitionBy("query_id")
-      .orderBy(col("dist").asc, col("vec_id"))
-    val short = adc.withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= 50)
-      .select("query_id", "vec_id")
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    short.join(q, "query_id")
-      .join(e, "vec_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("cosine_sim(q_embedding, embedding)").as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
+    pqRerank(adc, q, e)
   }
 
   // ---------------------------------------------------------------- s05
@@ -380,15 +442,8 @@ object Similarity {
     * shape: one broadcast assignment pass + one shuffle on (cid, pos) —
     * Lloyd at 100 TB is exactly this plan per iteration. */
   val s05 = Q("s05_kmeans_step",
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |c AS (SELECT vec_id AS cid, embedding FROM e WHERE vec_id < 16),
-       |assign AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${cosSql("e", "c")} DESC, c.cid) AS rn
-       |    FROM e, c)
-       |  WHERE rn = 1)
+    s"""WITH ${corpusSql()},
+       |${assignSql()}
        |SELECT a.cid, CAST(k - 1 AS BIGINT) AS pos,
        |  CAST(sum(CAST(round(CAST(e.embedding[k] AS DOUBLE) * 10000000) AS BIGINT)) AS DOUBLE)
        |    / 10000000.0 / count(*) AS c_mean
@@ -462,7 +517,6 @@ object Similarity {
   def kmeansLloyd(e0: DataFrame, maxIters: Int, k: Int = 16)
       : (DataFrame, Int, Boolean) = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    GraftFunctions.register(e0.sparkSession)
     val e = doubleVecs(e0).localCheckpoint()
     var c = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("embedding").as("c_embedding"))
@@ -492,13 +546,7 @@ object Similarity {
   private[ops] val lloyd2Ctes: String =
     s"""e AS (SELECT vec_id, embedding FROM embeddings),
        |c0 AS (SELECT vec_id AS cid, embedding FROM e WHERE vec_id < 16),
-       |a1 AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${cosSql("e", "c")} DESC, c.cid) AS rn
-       |    FROM e, c0 c)
-       |  WHERE rn = 1),
+       |${assignSql("a1", "c0 c")},
        |m1 AS (
        |  SELECT a.cid, k - 1 AS pos,
        |    CAST(sum(CAST(round(CAST(e.embedding[k] AS DOUBLE) * 10000000) AS BIGINT)) AS DOUBLE)
@@ -509,13 +557,7 @@ object Similarity {
        |c1 AS (
        |  SELECT cid, list(c_mean ORDER BY pos) AS embedding
        |  FROM m1 GROUP BY cid),
-       |a2 AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${cosSql("e", "c")} DESC, c.cid) AS rn
-       |    FROM e, c1 c)
-       |  WHERE rn = 1),
+       |${assignSql("a2", "c1 c")},
        |m2 AS (
        |  SELECT a.cid, k - 1 AS pos,
        |    CAST(sum(CAST(round(CAST(e.embedding[k] AS DOUBLE) * 10000000) AS BIGINT)) AS DOUBLE)
@@ -549,13 +591,7 @@ object Similarity {
     s"""c2 AS (
        |  SELECT cid, list(c_mean ORDER BY pos) AS embedding
        |  FROM m2 GROUP BY cid),
-       |assign2 AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${cosSql("e", "c")} DESC, c.cid) AS rn
-       |    FROM e, c2 c)
-       |  WHERE rn = 1)""".stripMargin
+       |${assignSql("assign2", "c2 c")}""".stripMargin
 
   // ---------------------------------------------------------------- s07
   /** IVF retrieval over RETRAINED centroids — the capstone s03's
@@ -570,54 +606,12 @@ object Similarity {
   val s07 = Q("s07_ivf_retrained",
     s"""WITH $lloyd2Ctes,
        |$retrainedAssignCtes,
-       |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 10),
-       |probed AS (
-       |  SELECT query_id, cid FROM (
-       |    SELECT q.query_id, c.cid,
-       |           row_number() OVER (PARTITION BY q.query_id
-       |                              ORDER BY ${cosSql("q", "c")} DESC, c.cid) AS prn
-       |    FROM q, c2 c)
-       |  WHERE prn <= 4),
-       |scored AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id, ${cosSql("q", "e")} AS cos
-       |  FROM probed p
-       |  JOIN assign2 a ON a.cid = p.cid AND a.vec_id <> p.query_id
-       |  JOIN q ON q.query_id = p.query_id
-       |  JOIN e ON e.vec_id = a.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+       |${ivfTopSql("c2 c", "assign2")}""".stripMargin) { (s, d) =>
     val e0 = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val (means, _, _) = kmeansLloyd(e0, maxIters = 2)
     val c = pivotCentroids(means).localCheckpoint()
     val e = doubleVecs(e0).localCheckpoint()
-    val assign = assignD(e, c).select("vec_id", "cid")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("cid"))
-    val probed = q.join(broadcast(c))
-      .select(col("query_id"), col("q_embedding"), col("cid"),
-        expr("cosine_sim_d(q_embedding, c_embedding)").as("cos"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= 4)
-      .select("query_id", "q_embedding", "cid")
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    probed.join(assign, "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(e, "vec_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("cosine_sim_d(q_embedding, embedding)").as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
+    ivfTop5(e, c, assignD(e, c).select("vec_id", "cid"), "cosine_sim_d")
   }
 
   // ---------------------------------------------------------------- s08
@@ -822,16 +816,31 @@ object Similarity {
        |      CAST($t.embedding[j] AS DOUBLE) * CAST($t.embedding[j] AS DOUBLE))))
        |  ) AS BIGINT))""".stripMargin.replaceAll("\n\\s*", " ")
 
-  /** The same SQ8 coding in Spark: (vec_id, code) over a (vec_id,
-    * embedding) frame. */
-  private def sq8Coded(e0: DataFrame): DataFrame = {
+  /** [[s09]]'s and [[s10]]'s first stage in Spark: the capped corpus
+    * `e0` (vec_id, embedding) and, over its SQ8 codes, every (query_id,
+    * neighbor_id) pair of the 10 queries with the integer code dot
+    * `dot_q`. */
+  private def sq8Scored(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    // №27: SQ8 coding + the broadcast shortlist dot products ride the
+    // single embeddings split — spread to session width first.
+    val e0 = graft.ops.Width.spread(
+      Dedup.validationCap(s, Tables.embeddings(s, d), "vec_id",
+        "spark.graft.validation.cap.vecs")
+        .select(col("vec_id"), col("embedding")))
     val norm = sqrt(aggregate(col("embedding"), lit(0.0),
       (acc, x) => acc + x.cast("double") * x.cast("double")))
-    e0.withColumn("norm", norm)
+    val coded = e0.withColumn("norm", norm)
       .select(col("vec_id"),
         transform(col("embedding"),
           x => round(lit(127.0) * x.cast("double") / col("norm")).cast("long"))
           .as("code"))
+    val q = coded.filter(col("vec_id") < 10)
+      .withColumnRenamed("vec_id", "query_id")
+      .withColumnRenamed("code", "q_code")
+    (e0, coded.join(broadcast(q), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        aggregate(zip_with(col("q_code"), col("code"), _ * _),
+          lit(0L), _ + _).as("dot_q")))
   }
 
   val s09 = Q("s09_sq8_topk", {
@@ -853,22 +862,9 @@ object Similarity {
        |FROM ranked WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin
   }) { (s, d) =>
-    // №27: SQ8 coding + the broadcast shortlist dot products ride the
-    // single embeddings split — spread to session width first.
-    val e0 = graft.ops.Width.spread(
-      Dedup.validationCap(s, Tables.embeddings(s, d), "vec_id",
-        "spark.graft.validation.cap.vecs")
-        .select(col("vec_id"), col("embedding")))
-    val coded = sq8Coded(e0)
-    val q = coded.filter(col("vec_id") < 10)
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("code", "q_code")
     val w = Window.partitionBy("query_id")
       .orderBy(col("dot_q").desc, col("neighbor_id"))
-    coded.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        aggregate(zip_with(col("q_code"), col("code"), _ * _),
-          lit(0L), _ + _).as("dot_q"))
+    sq8Scored(s, d)._2
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 5)
       .select("query_id", "neighbor_id", "rank", "dot_q")
@@ -912,48 +908,22 @@ object Similarity {
        |  FROM short s
        |  JOIN e qe ON qe.vec_id = s.query_id
        |  JOIN e ne ON ne.vec_id = s.neighbor_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY query_id
-       |                       ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM rer)
-       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    // №27: SQ8 coding + the broadcast shortlist dot products ride the
-    // single embeddings split — spread to session width first.
-    val e0 = graft.ops.Width.spread(
-      Dedup.validationCap(s, Tables.embeddings(s, d), "vec_id",
-        "spark.graft.validation.cap.vecs")
-        .select(col("vec_id"), col("embedding")))
-    val coded = sq8Coded(e0)
-    val q = coded.filter(col("vec_id") < 10)
-      .withColumnRenamed("vec_id", "query_id")
-      .withColumnRenamed("code", "q_code")
+       |${topSql("rer")}""".stripMargin) { (s, d) =>
+    val (e0, scored) = sq8Scored(s, d)
     val wI = Window.partitionBy("query_id")
       .orderBy(col("dot_q").desc, col("neighbor_id"))
-    val shortlist = coded.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        aggregate(zip_with(col("q_code"), col("code"), _ * _),
-          lit(0L), _ + _).as("dot_q"))
+    val shortlist = scored
       .withColumn("srank", row_number().over(wI))
       .filter(col("srank") <= RerankShortlist)
       .select("query_id", "neighbor_id")
     val qe = e0.filter(col("vec_id") < 10)
       .withColumnRenamed("vec_id", "query_id")
       .withColumnRenamed("embedding", "q_embedding")
-    val wC = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    shortlist
-      .join(e0.withColumnRenamed("vec_id", "neighbor_id")
-        .withColumnRenamed("embedding", "n_embedding"), Seq("neighbor_id"))
-      .join(broadcast(qe), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        expr("cosine_sim(q_embedding, n_embedding)").as("cos"))
-      .withColumn("rank", row_number().over(wC).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
+    top5(shortlist
+        .join(e0.withColumnRenamed("vec_id", "neighbor_id")
+          .withColumnRenamed("embedding", "n_embedding"), Seq("neighbor_id"))
+        .join(broadcast(qe), Seq("query_id")),
+      "neighbor_id", expr("cosine_sim(q_embedding, n_embedding)"))
   }
 
   // ---------------------------------------------------------------- s11
@@ -1033,14 +1003,7 @@ object Similarity {
        |  JOIN assign a ON a.cid = p.cid AND a.vec_id <> p.query_id
        |  JOIN q ON q.query_id = p.query_id
        |  JOIN ba e ON e.vec_id = a.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY query_id
-       |                       ORDER BY dot DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
+       |${topSql("scored", by = "dot")}""".stripMargin
   }) { (s, d) =>
     val b = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
@@ -1076,17 +1039,11 @@ object Similarity {
       .withColumn("prn", row_number().over(wProbe))
       .filter(col("prn") <= 4)
       .select("query_id", "q_embedding", "cid")
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("dot").desc, col("neighbor_id"))
-    probed.join(assign, "cid")
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(ba.select(col("vec_id"), col("embedding"), col("w")), "vec_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (col("w") * expr("dot_product(q_embedding, embedding)")).as("dot"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
+    top5(probed.join(assign, "cid")
+        .filter(col("vec_id") =!= col("query_id"))
+        .join(ba.select(col("vec_id"), col("embedding"), col("w")), "vec_id"),
+      "vec_id", col("w") * expr("dot_product(q_embedding, embedding)"),
+      by = "dot")
   }
 
   // ---------------------------------------------------------------- s12
@@ -1248,21 +1205,11 @@ object Similarity {
          |     * 1000000 // (SELECT count(*) FROM truth) AS recall_ppm"""
         .stripMargin
     }.mkString("\n  UNION ALL\n")
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |c AS (SELECT vec_id AS cid, embedding FROM e WHERE vec_id < 16),
-       |assign AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${cosSql("e", "c")} DESC, c.cid) AS rn
-       |    FROM e, c)
-       |  WHERE rn = 1),
-       |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 10),
+    s"""WITH ${corpusSql()},
+       |${assignSql()},
+       |${queriesSql()},
        |probes AS (
-       |  SELECT q.query_id, c.cid,
-       |         row_number() OVER (PARTITION BY q.query_id
-       |                            ORDER BY ${cosSql("q", "c")} DESC, c.cid) AS prn
-       |  FROM q, c),
+       |  ${probeRanksSql("c")}),
        |scored AS (
        |  SELECT p.query_id, a.vec_id AS neighbor_id, p.prn,
        |         ${cosSql("q", "e")} AS cos
@@ -1283,18 +1230,11 @@ object Similarity {
        |$rowsSql)
        |ORDER BY nprobe""".stripMargin
   }) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val c = centroidTable(e)
     val assign = assignToCentroids(e, c)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("cid"))
-    val probes = q.join(broadcast(c))
-      .select(col("query_id"), col("q_embedding"), col("cid"),
-        expr("cosine_sim(q_embedding, c_embedding)").as("cos"))
-      .withColumn("prn", row_number().over(wProbe))
+    val q = queries(e)
+    val probes = probeRanks(q, c, Seq("query_id", "q_embedding"))
       .select("query_id", "q_embedding", "cid", "prn")
     val scored = probes.join(assign, "cid")
       .filter(col("vec_id") =!= col("query_id"))
@@ -1348,24 +1288,10 @@ object Similarity {
   /** s14's contract, shared VERBATIM with its bucketed physical variant
     * [[s19]] (the s17/s18 precedent: one oracle, two layouts). */
   private lazy val filteredAnnSql: String =
-    s"""WITH e AS (SELECT vec_id, embedding, label FROM embeddings),
-       |c AS (SELECT vec_id AS cid, embedding FROM e WHERE vec_id < 16),
-       |assign AS (
-       |  SELECT vec_id, label, cid FROM (
-       |    SELECT e.vec_id, e.label, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${cosSql("e", "c")} DESC, c.cid) AS rn
-       |    FROM e, c)
-       |  WHERE rn = 1),
-       |q AS (SELECT vec_id AS query_id, embedding, label FROM e
-       |      WHERE vec_id < 10),
-       |probed AS (
-       |  SELECT query_id, cid FROM (
-       |    SELECT q.query_id, c.cid,
-       |           row_number() OVER (PARTITION BY q.query_id
-       |                              ORDER BY ${cosSql("q", "c")} DESC, c.cid) AS prn
-       |    FROM q, c)
-       |  WHERE prn <= 4),
+    s"""WITH ${corpusSql(", label")},
+       |${assignSql(label = true)},
+       |${queriesSql(", label")},
+       |${probedSql()},
        |scored AS (
        |  SELECT p.query_id, a.vec_id AS neighbor_id, ${cosSql("q", "e")} AS cos
        |  FROM probed p
@@ -1373,76 +1299,38 @@ object Similarity {
        |  JOIN assign a ON a.cid = p.cid AND a.vec_id <> p.query_id
        |                AND a.label = q.label
        |  JOIN e ON e.vec_id = a.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
+       |${topSql("scored")}""".stripMargin
 
   val s14 = Q("s14_filtered_topk", filteredAnnSql) { (s, d) =>
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val c = centroidTable(e)
-    val assign = assignToCentroids(e, c)
-      .join(e.select(col("vec_id"), col("label")), "vec_id")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"), col("label").as("q_label"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("cid"))
-    val probed = q.join(broadcast(c))
-      .select(col("query_id"), col("q_embedding"), col("q_label"), col("cid"),
-        expr("cosine_sim(q_embedding, c_embedding)").as("cos"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= 4)
-      .select("query_id", "q_embedding", "q_label", "cid")
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    val postings = assign.select(col("vec_id").as("a_vec"),
-      col("label").as("a_label"), col("cid"))
-    probed.join(postings,
-        Seq("cid"))
-      .filter(col("a_vec") =!= col("query_id") &&
-        col("a_label") === col("q_label"))
-      .join(e.select(col("vec_id").as("a_vec"), col("embedding")), Seq("a_vec"))
-      .select(col("query_id"), col("a_vec").as("neighbor_id"),
-        expr("cosine_sim(q_embedding, embedding)").as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
+    top5(s14Candidates(s, d, filtered = true),
+      "a_vec", expr("cosine_sim(q_embedding, embedding)"))
   }
 
-  /** Candidate count of [[s14]]'s filtered posting-list join —
-    * exposed for `SimilaritySpec`'s selectivity measurement. */
-  private[graft] def s14CandidateCount(s: SparkSession, d: String,
-      filtered: Boolean): Long = {
+  /** [[s14]]'s candidates with their embeddings: the members of each
+    * query's probed lists, self excluded and, when `filtered`, of the
+    * query's label only. */
+  private def s14Candidates(s: SparkSession, d: String,
+      filtered: Boolean): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
     val c = centroidTable(e)
-    val assign = assignToCentroids(e, c)
+    val postings = assignToCentroids(e, c)
       .join(e.select(col("vec_id"), col("label")), "vec_id")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"), col("label").as("q_label"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("cid"))
-    val probed = q.join(broadcast(c))
-      .select(col("query_id"), col("q_embedding"), col("q_label"), col("cid"),
-        expr("cosine_sim(q_embedding, c_embedding)").as("cos"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= 4)
-      .select("query_id", "q_label", "cid")
-    val postings = assign.select(col("vec_id").as("a_vec"),
-      col("label").as("a_label"), col("cid"))
-    probed.join(postings, Seq("cid"))
-      .filter(col("a_vec") =!= col("query_id") &&
-        (if (filtered) col("a_label") === col("q_label") else lit(true)))
-      .count()
+      .select(col("vec_id").as("a_vec"), col("label").as("a_label"), col("cid"))
+    val q = queries(e, col("label").as("q_label"))
+    val notSelf = col("a_vec") =!= col("query_id")
+    probe(q, c, 4, Seq("query_id", "q_embedding", "q_label"))
+      .join(postings, Seq("cid"))
+      .filter(if (filtered) notSelf && col("a_label") === col("q_label")
+        else notSelf)
+      .join(e.select(col("vec_id").as("a_vec"), col("embedding")), Seq("a_vec"))
   }
+
+  /** Candidate count of [[s14]] with and without its label filter —
+    * `SimilaritySpec`'s selectivity measurement. */
+  private[graft] def s14CandidateCount(s: SparkSession, d: String,
+      filtered: Boolean): Long =
+    s14Candidates(s, d, filtered).count()
 
   // ---------------------------------------------------------------- s15
   /** Sign-bit binary codes + Hamming shortlist + exact rerank — the
@@ -1711,25 +1599,28 @@ object Similarity {
        |ORDER BY query_id, rank""".stripMargin
   }
 
-  val s17 = Q("s17_graph_ann_topk", graphAnnSql) { (s, d) =>
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .localCheckpoint() // graph build + every hop's embedding fetch
-    val edges = knnGraphEdges(s, e).select("vec_id", "neighbor_id")
-      .localCheckpoint() // the index artifact every hop equi-joins
+  /** [[s17]]'s and [[s18]]'s search over the corpus `e`: the hop loop
+    * [[s17]] describes, from the entry vector 0, then the pool's top-5 (self
+    * excluded). A hop's two lookups are the callers': `outEdges(beam)`
+    * maps beam rows (query_id, node) to their out-neighbours (query_id,
+    * node), and `embedded(fresh, q)` attaches to each fresh (query_id,
+    * node) row its query's `q_emb` (from the 10-row `q`) and the node's
+    * embedding as `n_emb`.
+    *
+    * The visited pool and the expansion ledger are ONE checkpointed
+    * frame: ledger membership is an `expanded` flag on the pool row
+    * (ledger ⊆ visited always holds), so each hop runs one
+    * materialising action. Beam selection and the flag update share
+    * one window: rank the un-expanded rows per query; rows with rn ≤ B
+    * are this hop's beam and flip to expanded (the hop loop is
+    * job-count-bound, not compute-bound). */
+  private def graphAnn(e: DataFrame, outEdges: DataFrame => DataFrame,
+      embedded: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       .localCheckpoint() // 10 rows; broadcast into every hop's scoring
     val entry = e.filter(col("vec_id") === 0)
       .select(col("vec_id").as("node"), col("embedding").as("n_emb"))
-    // r17: the visited pool and the expansion ledger are ONE
-    // checkpointed frame — ledger membership is an `expanded` flag on
-    // the pool row (ledger ⊆ visited always held), so each hop runs
-    // ONE materialising action instead of two (beam checkpoint + pool
-    // checkpoint). Beam selection and the flag update share a single
-    // window: rank the un-expanded rows per query, rows with rn ≤ B
-    // are this hop's beam and flip to expanded (guide §1.2 step 1 —
-    // the hop loop was job-count-bound, not compute-bound; WidthProbe
-    // r16 measured 135 jobs for ~1.3 cpu-s).
     var pool = q.crossJoin(broadcast(entry))
       .select(col("query_id"), col("node"),
         expr("cosine_sim(q_emb, n_emb)").as("cos"),
@@ -1748,13 +1639,10 @@ object Similarity {
         .select("query_id", "node")
       val marked = ranked.select(col("query_id"), col("node"), col("cos"),
         (col("expanded") || col("rn") <= GraphBeam).as("expanded"))
-      val fresh = beam.join(edges, beam("node") === edges("vec_id"))
-        .select(col("query_id"), col("neighbor_id").as("node")).distinct()
+      val fresh = outEdges(beam).distinct()
         .join(pool.select("query_id", "node"), Seq("query_id", "node"),
           "left_anti")
-      val scored = fresh.join(broadcast(q), "query_id")
-        .join(e.select(col("vec_id").as("node"),
-          col("embedding").as("n_emb")), "node")
+      val scored = embedded(fresh, q)
         .select(col("query_id"), col("node"),
           expr("cosine_sim(q_emb, n_emb)").as("cos"),
           lit(false).as("expanded"))
@@ -1767,7 +1655,20 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** Per-process scratch base for s18's/s19's bucketed index artifacts. */
+  val s17 = Q("s17_graph_ann_topk", graphAnnSql) { (s, d) =>
+    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      .localCheckpoint() // graph build + every hop's embedding fetch
+    val edges = knnGraphEdges(s, e).select("vec_id", "neighbor_id")
+      .localCheckpoint() // the index artifact every hop equi-joins
+    graphAnn(e,
+      beam => beam.join(edges, beam("node") === edges("vec_id"))
+        .select(col("query_id"), col("neighbor_id").as("node")),
+      (fresh, q) => fresh.join(broadcast(q), "query_id")
+        .join(e.select(col("vec_id").as("node"),
+          col("embedding").as("n_emb")), "node"))
+  }
+
+  /** Per-process scratch base for s18-s20's bucketed index artifacts. */
   private lazy val annScratch: String =
     graft.GraftSession.scratchDir("ann")
 
@@ -1817,61 +1718,30 @@ object Similarity {
     require(new java.io.File(s"$idx/edges").listFiles()
       .count(_.getName.startsWith("b=")) > 1,
       "s18: the edge index is not bucketed — every hop would scan it whole")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .localCheckpoint() // 10 rows; broadcast into every hop's scoring
-    val entry = e.filter(col("vec_id") === 0)
-      .select(col("vec_id").as("node"), col("embedding").as("n_emb"))
-    // r17: s17's pool+flag shape (one checkpointed frame, one action
-    // per hop), and the pruned point-lookups are now JOINS against the
-    // tiny frontier frames instead of driver `collect()`+`isin`: the
-    // frontier side is broadcast (≤ Q·B rows), and dynamic partition
-    // pruning reuses that broadcast to skip the untouched b= bucket
-    // directories at runtime (in08's mechanism) — the coordinator
-    // stays on executors and the former 2 collects + 3 checkpoints
-    // per hop (WidthProbe r16: 167 jobs/query) become one action.
+    // s17's search; the pruned point-lookups are JOINS against the
+    // tiny frontier frames: the frontier side is broadcast (≤ Q·B
+    // rows), and dynamic partition pruning reuses that broadcast to
+    // skip the untouched b= bucket directories at runtime (in08's
+    // mechanism), so the coordinator stays on executors.
     // pmod, not %: the index was written with pmod, and for a negative
     // vec_id % is negative — the probe would miss the partition and
-    // silently return no rows (r12 ADVICE).
-    var pool = q.crossJoin(broadcast(entry))
-      .select(col("query_id"), col("node"),
-        expr("cosine_sim(q_emb, n_emb)").as("cos"),
-        lit(false).as("expanded"))
-      .localCheckpoint()
-    val wBeam = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("node"))
-    val wSel = Window.partitionBy("query_id", "expanded")
-      .orderBy(col("cos").desc, col("node"))
-    for (_ <- 1 to GraphHops) {
-      val ranked = pool.withColumn("rn", row_number().over(wSel))
-      val beam = ranked
-        .filter(!col("expanded") && col("rn") <= GraphBeam)
-        .select(col("query_id"), col("node"),
-          pmod(col("node"), lit(nb.toLong)).as("bb"))
-      val marked = ranked.select(col("query_id"), col("node"), col("cos"),
-        (col("expanded") || col("rn") <= GraphBeam).as("expanded"))
-      val hits = edgesP.join(broadcast(beam),
-          edgesP("b") === beam("bb") && edgesP("vec_id") === beam("node"))
-        .select(col("query_id"), col("neighbor_id").as("node"))
-      val fresh = hits.distinct()
-        .join(pool.select("query_id", "node"), Seq("query_id", "node"),
-          "left_anti")
-        .withColumn("fb", pmod(col("node"), lit(nb.toLong)))
-      val withQ = fresh.join(broadcast(q), "query_id")
-      val scored = embP
-        .select(col("b").as("eb"), col("vec_id"), col("embedding"))
-        .join(broadcast(withQ),
-          col("eb") === withQ("fb") && col("vec_id") === withQ("node"))
-        .select(col("query_id"), col("node"),
-          expr("cosine_sim(q_emb, embedding)").as("cos"),
-          lit(false).as("expanded"))
-      pool = marked.unionAll(scored).localCheckpoint()
-    }
-    pool.filter(col("node") =!= col("query_id"))
-      .withColumn("rank", row_number().over(wBeam).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("node").as("neighbor_id"), col("rank"))
-      .orderBy("query_id", "rank")
+    // silently return no rows.
+    def bucket(c: String) = pmod(col(c), lit(nb.toLong))
+    graphAnn(e,
+      beam0 => {
+        val beam = beam0.withColumn("bb", bucket("node"))
+        edgesP.join(broadcast(beam),
+            edgesP("b") === beam("bb") && edgesP("vec_id") === beam("node"))
+          .select(col("query_id"), col("neighbor_id").as("node"))
+      },
+      (fresh, q) => {
+        val withQ = fresh.withColumn("fb", bucket("node"))
+          .join(broadcast(q), "query_id")
+        embP.select(col("b").as("eb"), col("vec_id"), col("embedding"))
+          .join(broadcast(withQ),
+            col("eb") === withQ("fb") && col("vec_id") === withQ("node"))
+          .withColumnRenamed("embedding", "n_emb")
+      })
   }
 
   // ---------------------------------------------------------------- s19
@@ -1899,46 +1769,46 @@ object Similarity {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
     val c = centroidTable(e)
+    val postings = writeLists(s, "s19", "postings", c,
+      assignToCentroids(e, c).join(e, "vec_id")
+        .select(col("cid"), col("vec_id"), col("label"), col("embedding")))
+    top5(probedLists(postings,
+          probe(queries(e, col("label").as("q_label")), c, 4,
+            Seq("query_id", "q_embedding", "q_label")))
+        .filter(col("vec_id") =!= col("query_id") &&
+          col("label") === col("q_label")),
+      "vec_id", expr("cosine_sim(q_embedding, embedding)"))
+  }
+
+  /** Persists `lists`(cid, …) as IVF posting lists under a fresh `dir`
+    * of [[annScratch]]: partitioned by cid, one file per list of `c`
+    * (repartitioned by cid first — the s18 small-files lesson), read
+    * back. `q` names the query in the layout check. */
+  private def writeLists(s: SparkSession, q: String, dir: String,
+      c: DataFrame, lists: DataFrame): DataFrame = {
     val run = java.util.UUID.randomUUID().toString.take(8)
-    val idx = s"$annScratch/$run/postings"
-    val nLists = c.count().toInt
-    assignToCentroids(e, c).join(e, "vec_id")
-      .select(col("cid"), col("vec_id"), col("label"), col("embedding"))
-      .repartition(nLists, col("cid"))
+    val idx = s"$annScratch/$run/$dir"
+    lists.repartition(c.count().toInt, col("cid"))
       .write.partitionBy("cid").parquet(idx)
     val postings = s.read.parquet(idx)
     require(new java.io.File(idx).listFiles()
       .count(_.getName.startsWith("cid=")) > 1,
-      "s19: posting lists are not bucketed — every probe would scan all")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"), col("label").as("q_label"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("cid"))
-    val probed = q.join(broadcast(c))
-      .select(col("query_id"), col("q_embedding"), col("q_label"),
-        col("cid"), expr("cosine_sim(q_embedding, c_embedding)").as("cos"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= 4)
-      .select("query_id", "q_embedding", "q_label", "cid")
-      .localCheckpoint() // ≤ |Q|·P rows; read twice (cid set + join)
-    // the probed list ids — bounded by the probe budget |Q|·P, the
-    // coordinator-frontier discipline s18 set for pruned reads
+      s"$q: posting lists are not bucketed — every probe would scan all")
+    postings
+  }
+
+  /** The rows of the persisted `postings` in the lists that `probes`
+    * (cid, query…) names, joined to those probe rows. The probed list
+    * ids are collected first — ≤ |Q|·P of them, the coordinator-frontier
+    * discipline s18 set for pruned reads — so the read opens only
+    * their cid= dirs. */
+  private def probedLists(postings: DataFrame, probes: DataFrame): DataFrame = {
+    val probed = probes.localCheckpoint() // read twice: cid set + join
     val probedCids = probed.select("cid").distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
     postings
       .filter(col("cid").isin(probedCids: _*)) // partition pruning
       .join(broadcast(probed), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id") &&
-        col("label") === col("q_label"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("cosine_sim(q_embedding, embedding)").as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
   }
 
   // ---------------------------------------------------------------- s20
@@ -1964,40 +1834,18 @@ object Similarity {
     *
     * Law (SimilaritySpec): probing ALL C lists makes IVF-PQ ≡ flat PQ
     * — [[s20Run]] with nprobe=C equals s04's output row-for-row. The
-    * oracle splices s04's codebook/ADC CTEs with s03/s19's
-    * assign/probe CTEs verbatim; the SAME `c` table is both coarse
-    * quantiser and codebook source, exactly the shared-quantiser
+    * oracle is built from the same CTE definitions as s04's codebook,
+    * ADC table and shortlist re-rank and s03's assign and probe; only
+    * the candidate and ADC CTEs are its own. The SAME `c` table is both
+    * coarse quantiser and codebook source, exactly the shared-quantiser
     * shortcut small FAISS indexes use. */
   val s20 = Q("s20_ivfpq_topk",
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |c AS (SELECT vec_id AS cid, embedding FROM e WHERE vec_id < 16),
-       |ms AS (SELECT unnest(range(8)) AS m),
-       |codes AS (
-       |  SELECT vec_id, m, cid AS code FROM (
-       |    SELECT e.vec_id, ms.m, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id, ms.m
-       |                              ORDER BY ${subD2Sql("e", "c")} ASC, c.cid) AS rn
-       |    FROM e CROSS JOIN ms CROSS JOIN c)
-       |  WHERE rn = 1),
-       |assign AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT e.vec_id, c.cid,
-       |           row_number() OVER (PARTITION BY e.vec_id
-       |                              ORDER BY ${cosSql("e", "c")} DESC, c.cid) AS rn
-       |    FROM e, c)
-       |  WHERE rn = 1),
-       |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 10),
-       |probed AS (
-       |  SELECT query_id, cid FROM (
-       |    SELECT q.query_id, c.cid,
-       |           row_number() OVER (PARTITION BY q.query_id
-       |                              ORDER BY ${cosSql("q", "c")} DESC, c.cid) AS prn
-       |    FROM q, c)
-       |  WHERE prn <= 4),
-       |qd AS (
-       |  SELECT q.query_id, ms.m, c.cid,
-       |         CAST(${subD2Sql("q", "c")} AS DECIMAL(24,12)) AS d2
-       |  FROM q CROSS JOIN ms CROSS JOIN c),
+    s"""WITH ${corpusSql()},
+       |$pqCodesSql,
+       |${assignSql()},
+       |${queriesSql()},
+       |${probedSql()},
+       |$pqQdSql,
        |cand AS (
        |  SELECT p.query_id, a.vec_id
        |  FROM probed p
@@ -2009,26 +1857,7 @@ object Similarity {
        |  JOIN qd ON qd.query_id = cd.query_id AND qd.m = codes.m
        |         AND qd.cid = codes.code
        |  GROUP BY 1, 2),
-       |short AS (
-       |  SELECT query_id, vec_id FROM (
-       |    SELECT query_id, vec_id,
-       |           row_number() OVER (PARTITION BY query_id
-       |                              ORDER BY dist ASC, vec_id) AS srn
-       |    FROM adc)
-       |  WHERE srn <= 50),
-       |scored AS (
-       |  SELECT s.query_id, s.vec_id AS neighbor_id, ${cosSql("q", "e")} AS cos
-       |  FROM short s
-       |  JOIN q ON q.query_id = s.query_id
-       |  JOIN e ON e.vec_id = s.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+       |$pqRerankSql""".stripMargin) { (s, d) =>
     s20Run(s, d, nprobe = 4)
   }
 
@@ -2039,81 +1868,26 @@ object Similarity {
       nprobe: Int): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val c = centroidTable(e)
-    // PQ encode — s04's encoder: argmin sub-centroid per 8-dim
-    // subspace against the broadcast codebook, one map pass
-    val withM = e.select(col("vec_id"), col("embedding"),
-      explode(sequence(lit(0), lit(7))).as("m"))
-    val wCode = Window.partitionBy("vec_id", "m")
-      .orderBy(col("d2").asc, col("cid"))
-    val codesLong = withM.join(broadcast(c))
-      .select(col("vec_id"), col("m"), col("cid"),
-        expr(subD2Spark("embedding", "c_embedding")).as("d2"))
-      .withColumn("rn", row_number().over(wCode))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("m"), col("cid").as("code"))
     // one row per vector: codes[m] ascending — 8 small ints, the PQ
     // memory contract (the full embedding does NOT enter the index)
-    val packed = codesLong.groupBy("vec_id")
+    val packed = pqCodes(e, c).groupBy("vec_id")
       .agg(expr("transform(array_sort(collect_list(struct(m, code)))," +
         " x -> x.code)").as("codes"))
-    val assign = assignToCentroids(e, c)
-    val run = java.util.UUID.randomUUID().toString.take(8)
-    val idx = s"$annScratch/$run/pqlists"
-    val nLists = c.count().toInt
-    assign.join(packed, "vec_id")
-      .select(col("cid"), col("vec_id"), col("codes"))
-      .repartition(nLists, col("cid")) // one file per list (s18 lesson)
-      .write.partitionBy("cid").parquet(idx)
-    val postings = s.read.parquet(idx)
-    require(new java.io.File(idx).listFiles()
-      .count(_.getName.startsWith("cid=")) > 1,
-      "s20: posting lists are not bucketed — every probe would scan all")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("cid"))
-    val probed = q.join(broadcast(c))
-      .select(col("query_id"), col("cid"),
-        expr("cosine_sim(q_embedding, c_embedding)").as("cos"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= nprobe)
-      .select("query_id", "cid")
-      .localCheckpoint() // ≤ |Q|·P rows; read twice (cid set + join)
-    val probedCids = probed.select("cid").distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val postings = writeLists(s, "s20", "pqlists", c,
+      assignToCentroids(e, c).join(packed, "vec_id")
+        .select(col("cid"), col("vec_id"), col("codes")))
+    val q = queries(e)
     // ADC lookup table: |Q|·M·K rows, broadcast both ways
-    val qd = q.select(col("query_id"), col("q_embedding"),
-        explode(sequence(lit(0), lit(7))).as("m"))
-      .join(broadcast(c))
-      .select(col("query_id"), col("m"), col("cid").as("code"),
-        expr(subD2Spark("q_embedding", "c_embedding"))
-          .cast("decimal(24,12)").as("d2"))
-    val adc = postings
-      .filter(col("cid").isin(probedCids: _*)) // partition pruning
-      .join(broadcast(probed), Seq("cid"))
+    val qd = adcTable(q, c).withColumnRenamed("cid", "code")
+    val adc = probedLists(postings, probe(q, c, nprobe, Seq("query_id")))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         posexplode(col("codes")).as(Seq("m", "code")))
       .join(broadcast(qd), Seq("query_id", "m", "code"))
       .groupBy("query_id", "vec_id")
       .agg(sum(col("d2")).as("dist"))
-    val wShort = Window.partitionBy("query_id")
-      .orderBy(col("dist").asc, col("vec_id"))
-    val short = adc.withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= 50)
-      .select("query_id", "vec_id")
     // exact re-rank: Q·50 keyed lookups against the corpus flat store
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    short.join(q, "query_id")
-      .join(e, "vec_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        expr("cosine_sim(q_embedding, embedding)").as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .orderBy("query_id", "rank")
+    pqRerank(adc, q, e)
   }
 
   def all: Seq[Q] =

@@ -1606,11 +1606,7 @@ object Ingest {
     require(survivors
       .join(broadcast(dv), Seq("doc_id"), "left_semi").isEmpty,
       "in23: a revoked key survives in the purged bytes")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(dvPath))
+    graft.GraftSession.deleteRecursively(new java.io.File(dvPath))
     require(!new java.io.File(dvPath).exists(),
       "in23: the applied delete file must not outlive the purge")
     baseDig.union(morDig).union(digest(t.readAsOf(2), "3_after_purge"))

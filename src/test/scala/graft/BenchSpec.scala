@@ -42,6 +42,34 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseJsonStr(text, "round").contains("r11"))
   }
 
+  test("the committed bench artifacts read the same as under the former regex readers") {
+    // the flat-shape regex extractors the JSON parser replaced, kept as
+    // the reference for the files Bench actually reads
+    def regexMap(text: String, key: String): Map[String, Double] = {
+      val i = text.indexOf("\"" + key + "\":{")
+      if (i < 0) Map.empty
+      else {
+        val start = text.indexOf('{', i)
+        val end = text.indexOf('}', start)
+        val Pair = """"([^"]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
+        Pair.findAllMatchIn(text.substring(start + 1, end))
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      }
+    }
+    def regexStr(text: String, key: String): Option[String] =
+      ("\"" + key + "\":\"([^\"]+)\"").r.findFirstMatchIn(text).map(_.group(1))
+    for ((file, key) <- Seq("tools/bench_prev.json" -> "queries",
+        "tools/bench_anchors.json" -> "anchors")) {
+      val text = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(sys.props("user.dir"), file)),
+        java.nio.charset.StandardCharsets.UTF_8)
+      val parsed = Bench.parseJsonMap(text, key)
+      assert(parsed.nonEmpty, file)
+      assert(parsed == regexMap(text, key), file)
+      assert(Bench.parseJsonStr(text, "sf") == regexStr(text, "sf"), file)
+    }
+  }
+
   test("swing flagging: >2x over prev AND >=1s floor, slowest first") {
     val prev = Map("a" -> 2.0, "b" -> 0.3, "c" -> 5.0, "d" -> 1.0)
     val cur = Seq(

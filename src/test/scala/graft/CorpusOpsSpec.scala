@@ -728,7 +728,6 @@ class CorpusOpsSpec extends SparkSpec {
     } yield (a, b)).toSet
     assert(rows.keySet == expected)
     // brute-force recompute of one row (the lexicographic first pair)
-    graft.functions.GraftFunctions.register(spark)
     def shs(src: String): Set[String] = model.Tables.documents(spark, sf)
       .filter(col("source") === src)
       .select(split(col("text"), " ").as("w"))

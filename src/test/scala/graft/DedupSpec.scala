@@ -60,7 +60,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash64 hash families: md5 mode matches ofTokens(md5), fnv is the default") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, "spark query engine")).toDF("id", "text")
     val toks = Seq("spark", "query", "engine")
@@ -92,7 +91,6 @@ class DedupSpec extends SparkSpec {
 
   test("d09 production simhash equals the all-pairs Hamming<=3 reference, both families") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     for ((fast, label) <- families) withHashFamily(fast) {
       val mode = if (fast) "" else ", 'md5'"
       val h = model.Tables.documents(spark, sf)
@@ -296,7 +294,6 @@ class DedupSpec extends SparkSpec {
     // full inverted index generates Σ df·(df−1)/2 pairs; the prefix index
     // must generate strictly fewer (rarest-first order concentrates
     // prefixes on low-df shingles)
-    graft.functions.GraftFunctions.register(spark)
     val sh = model.Tables.documents(spark, sf)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)

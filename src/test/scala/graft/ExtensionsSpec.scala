@@ -12,7 +12,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("injected functions resolve without manual registration") {
     // a newSession() registry holds built-ins plus injected functions
-    // only: nothing has called GraftFunctions.register on it
+    // only: nothing but the extension has touched it
     val ext = spark.newSession()
     import ext.implicits._
     val r = Seq((Array(1f, 2f), Array(3f, 4f))).toDF("a", "b")
@@ -21,9 +21,9 @@ class ExtensionsSpec extends SparkSpec {
       .head()
     assert(r.getDouble(1) == 11.0)
     assert(r.getDouble(0) > 0.98)
-    // the full SQL surface: every GraftFunctions.register builder is
-    // also injected, so a spark.sql.extensions deployment never calls
-    // the per-session registry
+    // the full SQL surface: every GraftFunctions.table builder is
+    // injected, so a spark.sql.extensions deployment never calls the
+    // per-session registry
     val r2 = Seq((Array(1.0, 2.0), Array(3.0, 4.0), "a b c"))
       .toDF("da", "db", "txt")
       .selectExpr("cosine_sim_d(da, db)",
@@ -149,8 +149,11 @@ class ExtensionsSpec extends SparkSpec {
 
   test("source guard: src/main never assigns experimental.extraOptimizations or extraStrategies") {
     // GraftSession.configure's spark.sql.extensions is the one activation
-    // path; a per-session experimental swap would plan beside it
-    val assign = raw"experimental\s*\.\s*extra(Optimizations|Strategies)\s*=".r
+    // path; a per-session experimental swap would plan beside it, and a
+    // per-session function-registry registerFunction call would install
+    // a second copy of an injected function
+    val assign = ("experimental\\s*\\.\\s*extra(Optimizations|Strategies)\\s*=" +
+      "|\\.registerFunction\\s*\\(").r
     val root = new java.io.File(sys.props("user.dir"), "src/main")
     assert(root.isDirectory, s"no src/main under ${root.getParent}")
     def files(f: java.io.File): Seq[java.io.File] =

@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, SimHash64}
+import graft.functions.SimHash64
 
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("cosine_sim: parallel, orthogonal, opposite, zero vectors") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Array(1f, 0f), Array(2f, 0f)),   // parallel → 1
       (2L, Array(1f, 0f), Array(0f, 3f)),   // orthogonal → 0
@@ -24,7 +23,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim matches built-in aggregate/zip_with formulation") {
-    GraftFunctions.register(spark)
     val e = model.Tables.embeddings(spark, sf).limit(100)
     val both = e.selectExpr(
       "cosine_sim(embedding, embedding) AS custom",
@@ -42,7 +40,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim null propagates") {
-    GraftFunctions.register(spark)
     val df = Seq((Option(Array(1f)), Option.empty[Array[Float]]))
       .toDF("a", "b")
     assert(df.selectExpr("cosine_sim(a, b)").head().isNullAt(0))
@@ -53,7 +50,6 @@ class FunctionsSpec extends SparkSpec {
     // DotProduct on ANY float arrays (incl. containsNull=true, what
     // parquet reads) — sound only if null handling is identical: NULL on
     // length mismatch (zip_with pads with null) and on any null element.
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Seq[Option[Float]](Some(1f), Some(2f)), Seq[Option[Float]](Some(3f), Some(4f))),
       (2L, Seq[Option[Float]](Some(1f), None), Seq[Option[Float]](Some(3f), Some(4f))),
@@ -86,7 +82,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("simhash64 expression agrees with direct computation") {
-    GraftFunctions.register(spark)
     val df = Seq((1L, "spark query engine")).toDF("id", "text")
     val viaSql = df.selectExpr("simhash64(split(text, ' '))").head().getLong(0)
     assert(viaSql == SimHash64.ofTokens(Seq("spark", "query", "engine")))
@@ -122,7 +117,6 @@ class FunctionsSpec extends SparkSpec {
     }
     // through SQL (exercises the codegen path) and against Spark's own
     // levenshtein, same unit conventions, on a generated pair table
-    graft.functions.GraftFunctions.register(spark)
     val pairs = (0 until 64).map { i =>
       val base = s"document body $i " + ("tok " * (i % 9))
       val mut = base.patch(i % math.max(1, base.length),

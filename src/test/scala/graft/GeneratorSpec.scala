@@ -10,7 +10,6 @@ import graft.functions.NGramExplode
 class GeneratorSpec extends SparkSpec {
 
   test("plans as Generate over the native generator, no array node") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, "a b c d")).toDF("doc_id", "text")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -23,7 +22,6 @@ class GeneratorSpec extends SparkSpec {
   }
 
   test("generator == explode(word_shingles) on the corpus, all occurrences") {
-    graft.functions.GraftFunctions.register(spark)
     val w = model.Tables.documents(spark, sf)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
@@ -37,7 +35,6 @@ class GeneratorSpec extends SparkSpec {
   }
 
   test("edges: short docs emit nothing, null tokens read as empty, n=1") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val short = Seq("a b", "", "x").toDF("text")
       .select(split(col("text"), " ").as("w"))

@@ -123,11 +123,7 @@ class NewsKernelsSpec extends SparkSpec {
     }
   }
 
-  test("classify registers the kernels on its session; they resolve in SQL") {
-    NewsPipeline.classify(Seq("spark").toDF("text"))
-    val registry = spark.sessionState.functionRegistry
-    assert(registry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("keyword_classify")))
+  test("the kernels resolve in SQL on the configured session") {
     val row = spark.sql(
       "SELECT keyword_classify('spark fast fast').category AS c, " +
         "head_summary('a b c').n_words AS n").head()
@@ -136,7 +132,7 @@ class NewsKernelsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects both kernels session-wide") {
-    // a newSession() registry: classify's registration never touched it
+    // a newSession() registry: only the extension installs into it
     val row = spark.newSession().sql(
       "SELECT keyword_classify('window').category, head_summary(NULL).budget").head()
     assert(row.getString(0) == "arts")

@@ -739,7 +739,6 @@ class PlanAuditSpec extends SparkSpec {
     val truthStageOk = {
       // re-derive one P row's top-k frame and audit ITS plan
       import org.apache.spark.sql.functions._
-      graft.functions.GraftFunctions.register(spark)
       val e = model.Tables.embeddings(spark, sf)
         .select(col("vec_id"), col("embedding"))
       val q = e.filter(col("vec_id") < 10)

@@ -67,7 +67,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("s06 Lloyd loop: objective monotone over rounds on the corpus") {
     import org.apache.spark.sql.functions._
-    functions.GraftFunctions.register(spark)
     val e = ops.Similarity.doubleVecs(
       model.Tables.embeddings(spark, sf)
         .select(col("vec_id"), col("embedding"))).localCheckpoint()
@@ -166,7 +165,6 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     // true top-3 graph: all-pairs cosine, every vector a query
-    functions.GraftFunctions.register(spark)
     val e = model.Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"))
     val a = e.select(col("vec_id"), col("embedding").as("a_emb"))
@@ -311,7 +309,6 @@ class SimilaritySpec extends SparkSpec {
     val truth = {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
-      graft.functions.GraftFunctions.register(spark)
       val e = model.Tables.embeddings(spark, sf)
         .select(col("vec_id"), col("embedding"))
       val q = e.filter(col("vec_id") < 10)

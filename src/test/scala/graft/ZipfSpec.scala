@@ -27,7 +27,6 @@ class ZipfSpec extends SparkSpec {
       assert(b._4 <= a._5, s"octaves ${a._1}/${b._1} overlap in freq")
     }
     // mass conservation: octave masses sum to the corpus bigram count
-    graft.functions.GraftFunctions.register(spark)
     val total = model.Tables.documents(spark, sf)
       .select(split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 2)
